@@ -10,15 +10,29 @@ ONE ``pyspark.ml.Pipeline``; ``fit(train)`` captures all statistics and
 convention.
 
 Stage order: Imputer (train means, M-analog of mean_dict) →
-StringIndexer per categorical (``handleInvalid='keep'``, M1) →
+ONE multi-column StringIndexer over every categorical
+(``handleInvalid='keep'``, M1; one fit pass and one saved stage, with the
+same frequencyDesc/alphabetical labels as one indexer per column) →
 VectorAssembler (M2) → StandardScaler (withMean=False, M3) →
 RandomForestClassifier with the reference's exact hyperparameters
 (reference movie_pipeline/classifier_model.py:49-61) (M4), assembled via
 Pipeline (M5).
+
+Fit input: ``Pipeline.fit`` scans its input once per consumer — the
+Imputer, the indexer, the scaler, the forest's label/metadata/split
+passes, its bagged input and its training summary — so an unpersisted
+input re-runs the caller's whole lazy plan (scans, windows, joins) about
+ten times. ``train`` and ``tune_rf`` therefore fit on ``fit_input``: the
+spec's columns only, persisted for the duration of the fit. Projecting
+BEFORE persisting matters: caching the full frame would materialize
+columns the model never reads (e.g. the IMDB titles' Arrow NFKD UDF,
+which the projection prunes from the plan).
 """
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 from pyspark.ml import Pipeline, PipelineModel
@@ -75,10 +89,12 @@ def build_pipeline(spec: ClassifierSpec) -> Pipeline:
                 strategy="mean",
             )
         )
-    for c in spec.categorical_cols:
+    if spec.categorical_cols:
         stages.append(
             StringIndexer(
-                inputCol=c, outputCol=f"{c}_index", handleInvalid="keep"
+                inputCols=spec.categorical_cols,
+                outputCols=[f"{c}_index" for c in spec.categorical_cols],
+                handleInvalid="keep",
             )
         )
     stages.append(
@@ -102,8 +118,23 @@ def build_pipeline(spec: ClassifierSpec) -> Pipeline:
     return Pipeline(stages=stages)
 
 
+@contextmanager
+def fit_input(spec: ClassifierSpec, df: DataFrame) -> Iterator[DataFrame]:
+    """``df`` pruned to the spec's input columns and persisted while the
+    caller fits on it, so the upstream plan runs once per fit instead of
+    once per pipeline stage pass; unpersisted on exit."""
+    pruned = df.select(
+        *spec.numeric_cols, *spec.categorical_cols, spec.label_col
+    ).persist()
+    try:
+        yield pruned
+    finally:
+        pruned.unpersist()
+
+
 def train(spec: ClassifierSpec, train_df: DataFrame) -> PipelineModel:
-    return build_pipeline(spec).fit(train_df)
+    with fit_input(spec, train_df) as df:
+        return build_pipeline(spec).fit(df)
 
 
 def feature_importances(model: PipelineModel, spec: ClassifierSpec) -> list[tuple[str, float]]:
@@ -175,7 +206,8 @@ def tune_rf(
         seed=seed,
         parallelism=2,
     )
-    model = tvs.fit(train_df)
+    with fit_input(spec, train_df) as df:
+        model = tvs.fit(df)
     metrics = [
         (
             int(pm[rf.numTrees]),

@@ -77,30 +77,26 @@ def union_shards(shards: Sequence[DataFrame]) -> DataFrame:
     return out
 
 
+def column_means(df: DataFrame, cols: Sequence[str]) -> dict[str, float]:
+    """Means of ``cols`` (cast to double) in ONE aggregate job — the
+    reference runs one ``agg({col:'avg'}).collect()`` job PER COLUMN
+    (data_utils.py:244-264). An all-null column gets 1.0."""
+    row = df.agg(*[F.avg(F.col(c).cast("double")).alias(c) for c in cols]).first()
+    return {c: (row[c] if row[c] is not None else 1.0) for c in cols}
+
+
 def impute_mean(
     df: DataFrame,
     cols: Sequence[str],
-    means: dict[str, float] | None = None,
-    stats_df: DataFrame | None = None,
+    means: dict[str, float],
     treat_zero_as_null: bool = False,
 ) -> DataFrame:
     """Null→mean imputation (P6+A2, reference classifier_pipeline.py:190-204).
 
-    The reference runs one ``agg({col:'avg'}).collect()`` job PER COLUMN
-    (data_utils.py:244-264). Here all means come from ONE aggregate job
-    over ``stats_df`` (train data; defaults to ``df``) and are folded into
-    the plan as literals — train-computed statistics reused on test, same
-    as the reference's ``mean_dict`` contract.
+    ``means`` are computed once on train (``column_means``) and reused on
+    test — the reference's ``mean_dict`` contract — and are folded into
+    the plan as literals.
     """
-    if means is None:
-        src = stats_df if stats_df is not None else df
-        agg_src = src
-        if treat_zero_as_null:
-            agg_src = src.select(
-                *[F.when(F.col(c) != 0.0, F.col(c)).alias(c) for c in cols]
-            )
-        row = agg_src.agg(*[F.avg(c).alias(c) for c in cols]).first()
-        means = {c: (row[c] if row[c] is not None else 1.0) for c in cols}
     out = df
     for c in cols:
         fill = F.lit(float(means[c]))

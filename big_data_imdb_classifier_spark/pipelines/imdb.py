@@ -23,7 +23,12 @@ Same capabilities, different execution shapes:
   ONE pyspark.ml Pipeline fit on train and replayed on test — the
   reference refits its scaler per dataset (classifier_pipeline.py:405-407)
   and hand-carries indexer models in a dict (382-396); fitting once is
-  both the bug-fix and the scale shape (no second stats pass over test).
+  both the bug-fix and the scale shape (no second stats pass over test);
+* titles pruned before the fit: the NFKD-folded titles are kept on the
+  feature frames (reference parity) but are not model features, so
+  ``MLP.train`` projects the spec's columns BEFORE persisting the fit
+  input. The projection drops the title Arrow UDF from the plan; caching
+  the whole frame would instead run it over every train row for nothing.
 
 The extra TMDB CSV (budget/revenue/popularity, reference
 classifier_pipeline.py:210-242 + runner's required extra_data path) is
@@ -47,6 +52,7 @@ from pyspark.sql import functions as F
 from ..functions.nfkd import nfkd_fold_col
 from ..ml import pipeline as MLP
 from ..operators.relational import (
+    column_means,
     impute_mean,
     repair_year_bounds,
     top_k_per_group,
@@ -164,22 +170,17 @@ def load_imdb(
     )
 
 
-def preprocess(
-    df: DataFrame, train_df: DataFrame | None = None
-) -> DataFrame:
+def preprocess(df: DataFrame, means: dict[str, float]) -> DataFrame:
     """Numeric repair + title normalization (reference
     classifier_pipeline.py:163-209).
 
-    Mean imputation uses TRAIN statistics (``train_df``; defaults to
-    ``df`` when it IS train) — the mean_dict train→test reuse contract.
+    ``means`` are the TRAIN numeric means (``column_means`` on train),
+    shared by the train and test calls — the mean_dict train→test reuse
+    contract, computed once.
     """
     for c in ["startYear", "endYear"] + NUMERIC_COLS:
         df = df.withColumn(c, F.col(c).cast("double"))
-    stats = train_df
-    if stats is not None:
-        for c in NUMERIC_COLS:
-            stats = stats.withColumn(c, F.col(c).cast("double"))
-    df = impute_mean(df, NUMERIC_COLS, stats_df=stats)
+    df = impute_mean(df, NUMERIC_COLS, means=means)
     df = repair_year_bounds(df, "startYear", "endYear", default_year=2000)
     # NFKD-fold both titles, then cross-coalesce missing ones (F1+F2,
     # reference data_utils.py:187-215 — minus its toPandas round trip).
@@ -253,9 +254,10 @@ def build_features(
     spark: SparkSession, data: IMDBData
 ) -> tuple[DataFrame, DataFrame]:
     """(train_features, test_features) — preprocess + engineer both sets,
-    train statistics only ever computed on train."""
-    train = preprocess(data.train, train_df=None)
-    test = preprocess(data.test, train_df=data.train)
+    train statistics computed once, on train only."""
+    means = column_means(data.train, NUMERIC_COLS)
+    train = preprocess(data.train, means)
+    test = preprocess(data.test, means)
     tmdb_means = tmdb_nonzero_means(data.extra) if data.extra is not None else None
     train = engineer(train, data, data.train_genres, tmdb_means=tmdb_means)
     test = engineer(test, data, data.test_genres, tmdb_means=tmdb_means)

@@ -48,7 +48,9 @@ SPEC = MLP.ClassifierSpec(
 )
 
 _TRAIN_BUCKETS = 8  # of 10 → deterministic 80/20 split
-_CACHE_VERSION = 1
+# Bumped whenever the saved PipelineModel's stages change (v2: one
+# multi-column StringIndexer), so older disk entries are never reused.
+_CACHE_VERSION = 2
 _CACHE_ROOT = os.path.join(
     os.path.dirname(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -190,10 +192,6 @@ def _fitted(spark: SparkSession, sf_dir: str):
 
     df = training_frame(spark, sf_dir)
     train_df, test_df = split_frames(df)
-    # RF fitting scans the training set once per tree depth level;
-    # without a cache every scan re-executes the orders⋈lineitem
-    # rollup. Standard MLlib practice: persist the input before fit.
-    train_df = train_df.persist()
     model = MLP.train(SPEC, train_df)
     # The hold-out transform is the expensive shared step (the
     # 300-tree forest rides every task as a ~60 MB task binary and
@@ -238,7 +236,6 @@ def _fitted(spark: SparkSession, sf_dir: str):
             # equally valid (same fingerprint ⇒ same inputs ⇒ identical
             # deterministic fit); drop ours and carry on in-memory.
             shutil.rmtree(tmp, ignore_errors=True)
-    train_df.unpersist()
     fitted = (model, n_train, n_test, preds)
     _model_cache[key] = fitted
     return fitted

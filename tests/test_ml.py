@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+from pyspark.ml.feature import StringIndexer
 from pyspark.sql import functions as F
 
 from big_data_imdb_classifier_spark.ml import pipeline as MLP
@@ -13,6 +14,97 @@ from .conftest import SF_SMOKE
 def _splits(spark):
     df = QM.training_frame(spark, SF_SMOKE)
     return df.randomSplit([0.8, 0.2], seed=42)
+
+
+_CATS = ["c1", "c2", "c3", "c4"]
+_N_ROWS = 120
+# Small forest: these tests check how the input is fed to the fit, not
+# the reference hyperparameters.
+_SMALL_SPEC = MLP.ClassifierSpec(
+    numeric_cols=["x", "y"],
+    categorical_cols=_CATS,
+    rf_params=dict(MLP.RF_PARAMS, numTrees=5, maxDepth=4),
+)
+
+
+def _fixed_frame(spark):
+    """Fixed input with frequency ties in c1/c2 (alphabetical tie-break),
+    distinct frequencies in c3/c4, nulls in x, and an unused column u."""
+    rows = []
+    for i in range(_N_ROWS):
+        x = None if i % 11 == 0 else float(i % 17)
+        y = float((i * 7) % 23)
+        rows.append((
+            x, y,
+            "dcba"[i % 4],
+            "zy"[i % 2],
+            "k" if i % 3 else "m",
+            "q" if i % 5 == 0 else ("p" if i % 5 == 1 else "r"),
+            f"unused-{i}",
+            1.0 if (x or 0.0) + y > 20 else 0.0,
+        ))
+    return spark.createDataFrame(
+        rows, "x double, y double, c1 string, c2 string, c3 string, "
+        "c4 string, u string, label double",
+    )
+
+
+def test_train_runs_the_input_plan_once(spark):
+    """MLP.train materializes the spec's columns once for the whole fit
+    (every stage pass reads the persisted projection), and never
+    evaluates a column the spec does not name."""
+    sc = spark.sparkContext
+    used, unused = sc.accumulator(0), sc.accumulator(0)
+
+    def counting(acc):
+        def ident(v):
+            acc.add(1)
+            return v
+        return ident
+
+    df = (
+        _fixed_frame(spark)
+        .withColumn("y", F.udf(counting(used), "double")("y"))
+        .withColumn("u", F.udf(counting(unused), "string")("u"))
+    )
+    MLP.train(_SMALL_SPEC, df)
+    assert used.value == _N_ROWS
+    assert unused.value == 0
+
+
+def test_multi_column_indexer_matches_single_column_indexers(spark):
+    """The pipeline's one multi-column StringIndexer learns the same
+    labels as one single-column indexer per categorical: frequencyDesc,
+    ties broken alphabetically."""
+    df = _fixed_frame(spark)
+    [indexer] = [
+        s for s in MLP.build_pipeline(_SMALL_SPEC).getStages()
+        if isinstance(s, StringIndexer)
+    ]
+    multi = [list(ls) for ls in indexer.fit(df).labelsArray]
+    singles = [
+        list(
+            StringIndexer(inputCol=c, outputCol=f"{c}_index", handleInvalid="keep")
+            .fit(df)
+            .labelsArray[0]
+        )
+        for c in _CATS
+    ]
+    assert multi == singles
+    assert multi == [["a", "b", "c", "d"], ["y", "z"], ["k", "m"], ["r", "p", "q"]]
+
+
+def test_train_fits_the_same_forest_as_the_plain_pipeline(spark):
+    """Pruning and persisting the fit input leaves the fitted forest
+    unchanged (the debug string's first line carries the model uid)."""
+    df = _fixed_frame(spark)
+
+    def trees(model):
+        return model.stages[-1].toDebugString.split("\n", 1)[1]
+
+    assert trees(MLP.train(_SMALL_SPEC, df)) == trees(
+        MLP.build_pipeline(_SMALL_SPEC).fit(df)
+    )
 
 
 def test_training_frame_shape(spark):
