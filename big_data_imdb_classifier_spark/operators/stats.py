@@ -62,6 +62,12 @@ def distributed_cumsum(
     aggregate ties first) — duplicate order keys would make the running
     sum partition-order dependent and nondeterministic.
 
+    The rows and their offsets must see ONE evaluation of the range
+    exchange, which the planner's exchange reuse provides for a lazy
+    input. Over a ``persist()``-ed input the branches each plan their
+    own range exchange, the sampled bounds differ, ``_pid`` disagrees
+    and quantiles come back wrong — do not cache the input.
+
     Returns ``df``'s columns plus ``{m}_cum`` for each measure. With
     ``with_totals=True``, returns ``(result, totals)`` where totals is
     one row per key carrying ``{m}_tot`` — derived from the CONSTANT-
@@ -131,9 +137,7 @@ def group_quantiles(
     pcts: list[float],
     weight_col: str | None = None,
     assume_distinct: bool = False,
-    enum_keys: bool = False,
-    return_domain: bool = False,
-) -> DataFrame | tuple[DataFrame, DataFrame]:
+) -> DataFrame:
     """Exact interpolated quantiles of ``val_col`` per ``keys`` group
     (global when ``keys`` is empty), computed distributively.
 
@@ -143,11 +147,12 @@ def group_quantiles(
 
     With ``weight_col``, each input row stands for that many occurrences
     of its value — the PRE-AGGREGATED entry point: a caller that already
-    holds a distinct-value frame with counts (e.g. a previous quantile
-    pass's domain, or values derived arithmetically from one) feeds it
-    straight in and the fact table is never rescanned. Quantiles over
-    weighted values equal quantiles over the expanded multiset, because
-    rank intervals are exactly the cumulative weights. With
+    holds a distinct-value frame with counts (a ``groupBy(keys,
+    value).count()`` domain, or values derived arithmetically from one)
+    feeds it straight in and the fact table is never rescanned.
+    Quantiles over weighted values equal quantiles over the expanded
+    multiset, because rank intervals are exactly the cumulative weights.
+    With
     ``assume_distinct=True`` the caller additionally guarantees (keys,
     value) is unique per row (NULL values still allowed — they are
     filtered here) and the internal dedup aggregation — a full shuffle
@@ -157,51 +162,9 @@ def group_quantiles(
     to millions of groups; beyond that, drop the broadcast hint and let
     the planner sort-merge on the equi-key part of the condition (the
     range part becomes the join filter).
-
-    ``enum_keys=True`` selects the BOUNDED-KEY fast path (round 6): the
-    caller guarantees the key domain is a small enum (≤16 groups — a
-    flag column, not an id). The per-(key, partition) offset frame and
-    the per-key totals are then |groups|·nparts rows — the operator
-    collects them (the same bounded-collect class as the BPE argmax)
-    and re-enters them as literal expressions, turning two
-    broadcast-join lineages per pass into a projection + a
-    LocalRelation probe, and riding the dedup aggregation on the range
-    exchange itself. Round 7 trimmed the pass further: the checkpoint
-    is lazy (blocks materialize inside the offsets collect — one job
-    for exchange+window+checkpoint+totals) and the ≤|groups|·2·|pcts|
-    probe hits are collected with the lo/hi merge + interpolation done
-    driver-side, so the statistics come back as a LocalRelation and a
-    caller's follow-up ``.collect()`` costs no job. Same results bit-for-bit (driver floor/ceil/frac
-    arithmetic is the identical IEEE-754 double math the SQL
-    expressions performed); ~half the scheduled stages per pass —
-    this path exists because quantile passes on enum keys are
-    stage-latency-bound, not data-bound, at every scale.
     """
     if not pcts:
         raise ValueError("group_quantiles: pcts must be non-empty")
-    if return_domain and not enum_keys:
-        raise ValueError(
-            "group_quantiles: return_domain requires enum_keys=True "
-            "(the domain is only materialized on the bounded-key path)"
-        )
-    if enum_keys and not keys:
-        # MEASURED WRONG at scale (round 9): with the dummy constant key
-        # the optimizer constant-folds the aggregate's grouping down to
-        # the value column and the AQE exchange-elision premise the
-        # _pid-order fold rests on no longer holds at sf0.1-sized
-        # domains — ranks scramble SILENTLY (histogram edges came back
-        # wrong while sf0.01 passed). Global quantiles take the general
-        # path; pre-aggregate + weight_col if the scan matters.
-        raise ValueError(
-            "group_quantiles: enum_keys requires at least one real key "
-            "column (the dummy-key variant scrambles ranks at scale; "
-            "use the general path for global quantiles)"
-        )
-    if enum_keys:
-        return _group_quantiles_enum(
-            df, keys, val_col, pcts, weight_col, assume_distinct,
-            return_domain=return_domain,
-        )
     spark = df.sparkSession
     dummy = not keys
     if dummy:
@@ -302,235 +265,6 @@ def group_quantiles(
     )
     if dummy:
         out = out.drop("_gq_key")
-    return out
-
-
-_ENUM_MAX_GROUPS = 16
-
-
-def _group_quantiles_enum(
-    df: DataFrame,
-    keys: list[str],
-    val_col: str,
-    pcts: list[float],
-    weight_col: str | None,
-    assume_distinct: bool,
-    return_domain: bool = False,
-) -> DataFrame | tuple[DataFrame, DataFrame]:
-    """Bounded-key fast path of ``group_quantiles`` — see its docstring.
-
-    Stage shape per pass: ONE range exchange (the dedup aggregation
-    rides it — RangePartitioning satisfies the aggregate's clustering
-    requirement, verified by plan test), one window, a LAZY
-    localCheckpoint whose blocks materialize inside the bounded
-    offsets/totals collect (one job for exchange+window+checkpoint+
-    totals), then a LocalRelation rank probe over the cached blocks. NULL-key groups
-    are dropped exactly like the general path (its probe join uses
-    ``=``); the offset attach here uses null-safe equality so such rows
-    don't poison the cumsum before being dropped.
-
-    NULL VALUES ride along with rank-weight 0: they never match a rank
-    probe (their cum interval is empty), so quantiles are identical to
-    the general path's filtered ones — but they STAY in the
-    materialized domain, so a ``return_domain=True`` caller gets the
-    complete (keys, _v, _c) multiset (NULLs included) for follow-up
-    statistics (denominators that must count NULLs, deviation passes,
-    outlier cuts) without ever rescanning or re-shuffling the corpus.
-    """
-    import math
-
-    spark = df.sparkSession
-    dummy = not keys
-    if dummy:
-        df = df.withColumn("_gq_key", F.lit(0))
-        keys = ["_gq_key"]
-    kcols = [F.col(k) for k in keys]
-    key_fields = [df.schema[k] for k in keys]
-
-    # NOTE: this path REQUIRES AQE enabled (the engine default, asserted
-    # by the plan test): the static plan for the dedup-rides-the-range-
-    # exchange shape carries an ENSURE_REQUIREMENTS hash exchange (the
-    # aggregate keys are knownfloatingpointnormalized(_v), which the
-    # planner does not match against the range partitioning); AQE elides
-    # it at runtime, and the _pid-order-equals-value-order premise the
-    # offset fold rests on holds only then. An AQE-off run was measured
-    # ~12% faster on job boundaries but SCRAMBLES the ranks through that
-    # surviving hash exchange — do not re-attempt without making _pid a
-    # data column stamped before the dedup.
-    return _group_quantiles_enum_body(
-        spark, df, keys, kcols, key_fields, val_col, pcts, weight_col,
-        assume_distinct, return_domain, dummy, math,
-    )
-
-
-def _group_quantiles_enum_body(
-    spark,
-    df: DataFrame,
-    keys: list[str],
-    kcols: list,
-    key_fields: list,
-    val_col: str,
-    pcts: list[float],
-    weight_col: str | None,
-    assume_distinct: bool,
-    return_domain: bool,
-    dummy: bool,
-    math,
-) -> DataFrame | tuple[DataFrame, DataFrame]:
-    nparts = max(
-        int(spark.conf.get("spark.sql.shuffle.partitions", "32")), 1
-    )
-    raw = df.select(
-        *kcols,
-        F.col(val_col).alias("_v"),
-        (F.col(weight_col) if weight_col else F.lit(1)).alias("_c"),
-    )
-    d = raw.repartitionByRange(nparts, *keys, "_v")
-    if not assume_distinct:
-        # Duplicate (keys, _v) rows co-locate under the range exchange,
-        # so this aggregation adds NO further shuffle.
-        d = d.groupBy(*keys, "_v").agg(F.sum("_c").alias("_c"))
-    d = (
-        d.withColumn(
-            "_cr", F.when(F.col("_v").isNotNull(), F.col("_c")).otherwise(0)
-        )
-        .withColumn("_pid", F.spark_partition_id())
-        .withColumn(
-            "_loc",
-            F.sum("_cr").over(
-                Window.partitionBy(*keys, "_pid").orderBy("_v")
-            ),
-        )
-        # LAZY checkpoint (round 7): the ptot collect below is the first
-        # action and materializes the blocks as a side effect, so the
-        # exchange+window pass and the block write happen in ONE job
-        # instead of an eager-checkpoint job followed by a ptot job —
-        # one driver round-trip saved per quantile pass, which is the
-        # unit this stage-latency-bound path is billed in. Later
-        # consumers (the rank probe, return_domain callers) read the
-        # same materialized blocks either way.
-        .localCheckpoint(eager=False)
-    )
-
-    ptot = d.groupBy(*keys, "_pid").agg(F.sum("_cr").alias("_pt")).collect()
-    groups = {tuple(r[k] for k in keys) for r in ptot}
-    if len(groups) > _ENUM_MAX_GROUPS:
-        raise ValueError(
-            f"group_quantiles(enum_keys=True): {len(groups)} groups "
-            f"exceed the bounded-enum cap {_ENUM_MAX_GROUPS}; use the "
-            "distributed path for unbounded keys"
-        )
-    offsets: dict = {}
-    totals: dict = {}
-    for kt in groups:
-        run = 0
-        for pid, pt in sorted(
-            (r["_pid"], r["_pt"])
-            for r in ptot
-            if tuple(r[k] for k in keys) == kt
-        ):
-            offsets[kt + (pid,)] = run
-            run += pt
-        totals[kt] = run
-
-    # Offset attach as a CONSTANT-FOLDED literal-array lookup indexed by
-    # group_idx·nparts + pid, replacing the broadcast ofs join. (A
-    # per-(key, pid) CASE chain was tried first and measured ~2× SLOWER
-    # than the join it replaced: ~100 branches exceed codegen limits and
-    # evaluate interpreted, per row, twice — via _cum and _cum_prev. An
-    # array of literals folds to one Literal; the only per-row work is a
-    # ≤16-branch group-index CASE and an element_at.)
-    group_list = sorted(groups, key=lambda kt: tuple(map(str, kt)))
-    gidx = {kt: i for i, kt in enumerate(group_list)}
-    flat = [0] * (len(group_list) * nparts)
-    for kt_pid, off in offsets.items():
-        flat[gidx[kt_pid[:-1]] * nparts + kt_pid[-1]] = int(off)
-    gidx_col = F.when(F.lit(False), F.lit(None).cast("int"))
-    for kt, i in gidx.items():
-        cond = F.lit(True)
-        for k, kv in zip(keys, kt):
-            cond = cond & F.col(k).eqNullSafe(F.lit(kv))
-        gidx_col = gidx_col.when(cond, F.lit(i))
-    ofs_col = F.element_at(
-        F.array(*[F.lit(v) for v in flat]).cast("array<long>"),
-        gidx_col * nparts + F.col("_pid") + 1,
-    )
-    d = d.withColumn("_cum", F.col("_loc") + ofs_col).withColumn(
-        "_cum_prev", F.col("_cum") - F.col("_cr")
-    )
-
-    # Rank probes from driver arithmetic — IDENTICAL IEEE-754 doubles to
-    # the SQL floor/ceil/frac expressions of the general path.
-    probe_rows = []
-    for kt, n in totals.items():
-        for i, p in enumerate(pcts):
-            h = (n - 1) * float(p)
-            probe_rows.append(
-                kt + (i, h - math.floor(h), int(math.floor(h)), "lo")
-            )
-            probe_rows.append(
-                kt + (i, h - math.floor(h), int(math.ceil(h)), "hi")
-            )
-    from pyspark.sql import types as T
-
-    probe_schema = T.StructType(
-        list(key_fields)
-        + [
-            T.StructField("_i", T.IntegerType()),
-            T.StructField("_frac", T.DoubleType()),
-            T.StructField("_k", T.LongType()),
-            T.StructField("_side", T.StringType()),
-        ]
-    )
-    ranks = spark.createDataFrame(probe_rows, probe_schema)
-    d_a, ranks_a = d.alias("_gqv"), ranks.alias("_gqr")
-    cond = _and_all(
-        [F.col(f"_gqv.{k}") == F.col(f"_gqr.{k}") for k in keys]
-        + [
-            F.col("_gqr._k") >= F.col("_gqv._cum_prev"),
-            F.col("_gqr._k") < F.col("_gqv._cum"),
-        ]
-    )
-    # The probe hits are BOUNDED — at most one domain row per (group,
-    # pct, side), i.e. ≤ 16·|pcts|·2 rows — so they are collected and
-    # the lo/hi merge + linear interpolation run on the driver (the same
-    # IEEE-754 double arithmetic the general path's SQL projection
-    # performs), and the result returns as a LocalRelation: the two
-    # post-probe aggregation stages are gone, and a caller's follow-up
-    # ``.collect()`` of the statistics frame costs NO job at all (the
-    # mad-outliers two-pass chain collects both of its statistic frames).
-    hit_rows = (
-        d_a.join(F.broadcast(ranks_a), cond)
-        .select(*[F.col(f"_gqv.{k}") for k in keys], "_v", "_i", "_side")
-        .collect()
-    )
-    acc: dict = {}
-    for r in hit_rows:
-        kt = tuple(r[k] for k in keys)
-        acc.setdefault(kt, {}).setdefault(r["_i"], {})[r["_side"]] = r["_v"]
-    out_rows = []
-    for kt in sorted(acc, key=lambda t: tuple(map(str, t))):
-        n = totals[kt]
-        edges = []
-        for i, p in enumerate(pcts):
-            h = (n - 1) * float(p)
-            frac = h - math.floor(h)
-            vlo = acc[kt][i]["lo"]
-            vhi = acc[kt][i]["hi"]
-            edges.append(vlo + frac * (vhi - vlo))
-        out_rows.append(kt + (edges,))
-    out_schema = T.StructType(
-        list(key_fields)
-        + [T.StructField("q", T.ArrayType(T.DoubleType()), True)]
-    )
-    out = spark.createDataFrame(out_rows, out_schema)
-    if dummy:
-        out = out.drop("_gq_key")
-    if return_domain:
-        domain = d.select(*keys, "_v", "_c")
-        if dummy:
-            domain = domain.drop("_gq_key")
-        return out, domain
     return out
 
 

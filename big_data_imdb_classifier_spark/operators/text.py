@@ -13,6 +13,8 @@ the dedup operators oracle-checkable end-to-end.
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -561,7 +563,9 @@ def connected_components_min_label(
     ≤ max_iter hops. Converges in O(graph diameter) rounds — near-dup
     clusters are small and dense (diameter 2-3 in practice), so a bounded
     iteration count is the pragmatic distributed choice (same loop shape
-    as GraphFrames' CC without the dependency).
+    as GraphFrames' CC without the dependency). A graph that is still
+    changing labels after ``max_iter`` rounds raises ``ValueError``
+    rather than returning a partial labelling.
 
     Returns (node, component) where component = min doc id of the
     cluster. Each round is two shuffles (join + min-agg) over the EDGE
@@ -592,7 +596,7 @@ def connected_components_min_label(
     labels = edges.select("src").distinct().select(
         F.col("src").alias("node"), F.col("src").alias("component")
     )
-    for _ in range(max_iter):
+    for rounds in range(1, max_iter + 1):
         neighbor_min = (
             edges.join(labels, edges.dst == labels.node)
             .groupBy("src")
@@ -622,6 +626,15 @@ def connected_components_min_label(
         labels = new_labels.drop("_prev")
         if changed == 0:
             break
+    else:
+        raise ValueError(
+            "connected_components_min_label: labels still changing after "
+            f"max_iter={max_iter} rounds; the graph's diameter exceeds the "
+            "round limit, pass a larger max_iter"
+        )
+    logging.getLogger(__name__).info(
+        "connected_components_min_label: converged in %d rounds", rounds
+    )
     return labels
 
 

@@ -55,17 +55,8 @@ def stats_percentiles_by_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     li = load_table(spark, sf_dir, "lineitem")
     names = ["p25_price", "p50_price", "p75_price", "p95_price"]
-    # enum_keys: l_returnflag is a 3-value enum — the documented
-    # bounded-key fast path (same class as stats_mad_outliers /
-    # winsorize_extendedprice): one range-exchange job with the dedup
-    # riding the exchange, probe hits interpolated driver-side, and the
-    # statistics return as a LocalRelation — replacing the general
-    # path's broadcast-join lineages. Values are bit-identical (same
-    # IEEE-754 interpolation; re-proven against the oracle at all three
-    # SFs including sf0.1).
     q = group_quantiles(
-        li, ["l_returnflag"], "l_extendedprice", [0.25, 0.50, 0.75, 0.95],
-        enum_keys=True,
+        li, ["l_returnflag"], "l_extendedprice", [0.25, 0.50, 0.75, 0.95]
     )
     return (
         q.select(
@@ -263,23 +254,19 @@ def approx_percentile_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     approx_distinct_parts. The sketch pair rides one shuffle (array-form
     percentile_approx: ONE GK sketch per group serves both quantiles);
     the exact reference values come from the distributed order-statistics
-    operator's bounded-enum path, not a builtin sort buffer."""
+    operator, not a builtin sort buffer."""
     from ..operators.stats import group_quantiles
 
     li = load_table(spark, sf_dir, "lineitem")
-    # Exact side via the DISTRIBUTED order-statistics operator on the
-    # bounded-enum path, not the builtin F.percentile: the builtin
-    # buffers and sorts every group value in one ObjectHashAggregate
-    # buffer — exactly the 100 TB OOM shape this query exists to show
-    # the way around. group_quantiles returns the 3-row exact frame as
-    # a LocalRelation (bit-identical interpolation, re-proven against
-    # the oracle at all three SFs); it joins the sketch aggregate as a
-    # broadcast, so the only data-sized pass left is the mergeable GK
-    # sketch — the actual 100 TB path.
+    # Exact side via the DISTRIBUTED order-statistics operator, not the
+    # builtin F.percentile: the builtin buffers and sorts every group
+    # value in one ObjectHashAggregate buffer — exactly the 100 TB OOM
+    # shape this query exists to show the way around. The exact frame
+    # has one row per flag and joins the sketch aggregate as a
+    # broadcast.
     ps = F.array(F.lit(0.5), F.lit(0.95))
     exact = group_quantiles(
-        li, ["l_returnflag"], "l_extendedprice", [0.5, 0.95],
-        enum_keys=True,
+        li, ["l_returnflag"], "l_extendedprice", [0.5, 0.95]
     ).select("l_returnflag", F.col("q").alias("_ex"))
     ap = F.percentile_approx("l_extendedprice", ps, F.lit(10000))
     p50, p95 = F.col("_ex")[0], F.col("_ex")[1]
@@ -545,104 +532,54 @@ def stats_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     vs 0%). The data-quality screen a curation pipeline runs on numeric
     columns before imputation picks fill values.
 
-    ONE corpus scan, one corpus shuffle (round-6 plan, r5 verdict ask
-    #5): the first median pass's range exchange dedups the fact table
-    into the distinct ``(flag, price, count)`` domain itself
-    (``group_quantiles(enum_keys=True, return_domain=True)`` — the
-    aggregation rides the range partitioning, plan-tested), and every
-    subsequent stage is arithmetic on the returned checkpointed domain:
-    the deviation median's inputs are ``(flag, |price − med|, count)``
-    (a projection, no rescan) and the outlier cut is a weighted count
-    over the same rows. Both medians run through the DISTRIBUTED
-    order-statistics operator — the builtin ``F.percentile`` aggregate
-    would buffer a third of the fact table per flag on one reducer
-    (see stats_percentiles_by_flag). NULL prices stay in the domain
-    with rank-weight zero so the final denominator counts them,
-    exactly like the oracle's ``count(*)``.
-
-    Stage-count cut vs the r5 shape (5.3 → ~3.5 s local total): the
-    ``med``/``mad`` statistic frames are COLLECTED to the driver — one
-    row per ``l_returnflag``, a 3-value enum, the same bounded-collect
-    class as the BPE per-round argmax — and re-enter the plan as
-    literal CASE expressions, removing two eager checkpoints and three
-    broadcast exchanges from a query that is stage-latency-bound
-    locally (each scheduled job ≈0.5 s on a 594k-value domain;
-    data-proportional work is a fraction of that). For an UNBOUNDED
-    group key, keep the statistic frames distributed and
-    broadcast-join them (the r5 shape); with a bounded enum key the
-    driver round-trip is strictly cheaper at every scale."""
+    ONE corpus scan: every output is a function of the price VALUE and a
+    row count, so the query runs off the distinct ``(flag, price,
+    count)`` domain, built once with ``groupBy(...).count()`` (the
+    ``histogram_equidepth_price`` shape). The median pass consumes it
+    pre-aggregated; the deviation median's inputs are ``(flag, |price −
+    med|, count)`` — a projection, no rescan — and the outlier cut is a
+    weighted count over the same rows. Both medians run through the
+    DISTRIBUTED order-statistics operator — the builtin ``F.percentile``
+    aggregate would buffer a third of the fact table per flag on one
+    reducer (see stats_percentiles_by_flag). NULL prices keep their
+    weight in the domain, so the final denominator counts them exactly
+    like the oracle's ``count(*)``."""
     from ..operators.stats import group_quantiles
 
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_returnflag", "l_extendedprice"
+    li = load_table(spark, sf_dir, "lineitem")
+    # The domain stays lazy, not persisted: group_quantiles needs its
+    # range exchange reused across branches (see distributed_cumsum).
+    vc = li.groupBy(
+        "l_returnflag", F.col("l_extendedprice").alias("_v")
+    ).agg(F.count("*").alias("_c"))
+    med = group_quantiles(
+        vc, ["l_returnflag"], "_v", [0.5], weight_col="_c",
+        assume_distinct=True,
+    ).select("l_returnflag", F.col("q")[0].alias("med"))
+    # Left joins keep flags whose prices are all NULL (no quantile row):
+    # the oracle reports them with NULL statistics and zero outliers.
+    with_med = vc.join(F.broadcast(med), "l_returnflag", "left")
+    dev = F.abs(F.col("_v") - F.col("med"))
+    # |price − med| folds values mirrored around the median onto one
+    # deviation, so this pass keeps the operator's dedup aggregation.
+    mad = group_quantiles(
+        with_med.select("l_returnflag", dev.alias("_dev"), "_c"),
+        ["l_returnflag"], "_dev", [0.5], weight_col="_c",
+    ).select("l_returnflag", F.col("q")[0].alias("mad"))
+    n_out = F.sum(
+        F.when(dev > _MAD_CUT * _MAD_K * F.col("mad"), F.col("_c"))
+        .otherwise(0)
     )
-    # ONE corpus scan total: the first quantile pass's range exchange
-    # performs the dedup itself (enum path) and hands back the
-    # materialized (flag, price, count) domain — NULL prices included
-    # with rank-weight 0, because the final denominator must count
-    # them, exactly like the oracle's count(*).
-    med_df, vc = group_quantiles(
-        li,
-        ["l_returnflag"],
-        "l_extendedprice",
-        [0.5],
-        # l_returnflag is a 3-value enum — bounded-key fast path
-        enum_keys=True,
-        return_domain=True,
-    )
-    med_map = {
-        r["l_returnflag"]: r["med"]
-        for r in med_df.select(
-            "l_returnflag", F.col("q")[0].alias("med")
-        ).collect()
-    }
-
-    def _case_over_flags(stats: dict) -> F.Column:
-        expr = F.when(F.lit(False), F.lit(None).cast("double"))
-        for flag in sorted(stats):
-            expr = expr.when(
-                F.col("l_returnflag") == F.lit(flag), F.lit(stats[flag])
-            )
-        return expr  # no otherwise → NULL for flags absent from stats
-
-    x = F.col("_v")
-    med_c = _case_over_flags(med_map)
-    devs = vc.select(
-        "l_returnflag", F.abs(x - med_c).alias("_dev"), "_c"
-    )
-    mad_map = {
-        r["l_returnflag"]: r["mad"]
-        for r in group_quantiles(
-            devs, ["l_returnflag"], "_dev", [0.5], weight_col="_c",
-            enum_keys=True,
-        )
-        .select("l_returnflag", F.col("q")[0].alias("mad"))
-        .collect()
-    }
-    mad_c = _case_over_flags(mad_map)
-    is_out = F.abs(x - med_c) > _MAD_CUT * _MAD_K * mad_c
     return (
-        # Flags with all-NULL prices have no statistics — drop them,
-        # exactly like the oracle's inner join against `mad`.
-        vc.where(F.col("l_returnflag").isin(*mad_map) if mad_map
-                 else F.lit(False))
+        # NULL flags are dropped, like the oracle's equi-joins.
+        with_med.where(F.col("l_returnflag").isNotNull())
+        .join(F.broadcast(mad), "l_returnflag", "left")
         .groupBy("l_returnflag")
         .agg(
-            F.sum(F.when(is_out, F.col("_c")).otherwise(0)).alias(
-                "n_outliers"
-            ),
-            F.round(
-                F.sum(F.when(is_out, F.col("_c")).otherwise(0))
-                / F.sum("_c"),
-                _R,
-            ).alias("outlier_frac"),
-        )
-        .select(
-            "l_returnflag",
-            F.round(med_c, _R).alias("median_price"),
-            F.round(mad_c, _R).alias("mad_price"),
-            "n_outliers",
-            "outlier_frac",
+            F.round(F.any_value("med"), _R).alias("median_price"),
+            F.round(F.any_value("mad"), _R).alias("mad_price"),
+            n_out.alias("n_outliers"),
+            F.round(n_out / F.sum("_c"), _R).alias("outlier_frac"),
         )
         .orderBy("l_returnflag")
     )
@@ -693,11 +630,6 @@ def winsorize_extendedprice(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_returnflag", "l_extendedprice"
     )
     x = F.col("l_extendedprice")
-    # Bounded-key fast path (round 9): l_returnflag is the same 3-value
-    # enum stats_mad_outliers rides — the cut pass drops from the
-    # general path's broadcast-join lineages to one range-exchange job
-    # with driver-side interpolation (bit-identical doubles, see
-    # group_quantiles), and the cuts come back as a LocalRelation.
     # The clip+aggregate deliberately stays ROW-LEVEL: folding it into
     # the weighted (value, count) domain would turn the oracle's
     # row-order avg() into a sum(v·c) accumulation — a different FP
@@ -705,8 +637,7 @@ def winsorize_extendedprice(spark: SparkSession, sf_dir: str) -> DataFrame:
     # for zero structural gain (the clip pass is already one
     # partial+final aggregate over two pruned columns).
     cuts = group_quantiles(
-        li, ["l_returnflag"], "l_extendedprice", [_WINS_LO, _WINS_HI],
-        enum_keys=True,
+        li, ["l_returnflag"], "l_extendedprice", [_WINS_LO, _WINS_HI]
     ).select(
         "l_returnflag",
         F.col("q")[0].alias("lo"),

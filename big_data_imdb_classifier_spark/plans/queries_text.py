@@ -178,8 +178,8 @@ _LSH_CTES = f"""toks AS (SELECT doc_id, {_TOKS} AS t FROM documents),
 # Connected components over the jaccard ≥ 0.5 near-dup graph as a
 # RECURSIVE transitive closure: every node's component label is the
 # smallest doc_id it can reach. This is the exact fixpoint the engine's
-# bounded min-label propagation converges to (diameter ≤ max_iter —
-# driver-gate hash equality proves the bound holds on this corpus).
+# bounded min-label propagation converges to; a graph whose diameter
+# exceeds its max_iter raises instead of returning partial labels.
 _CC_CTES = f"""{_LSH_CTES},
     strong AS (
       SELECT c.doc_a, c.doc_b

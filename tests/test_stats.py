@@ -126,8 +126,8 @@ def test_group_quantiles_weighted_equals_expanded(spark):
     """The weight_col pre-aggregated entry point must equal quantiles
     over the row-expanded multiset — rank intervals are cumulative
     weights, so a (value, count) domain frame stands in for the fact
-    table exactly (the one-scan stats_mad_outliers plan rides on
-    this)."""
+    table exactly (the one-scan stats_mad_outliers and
+    histogram_equidepth_price plans ride on this)."""
     import random
 
     from big_data_imdb_classifier_spark.operators.stats import group_quantiles
@@ -152,90 +152,58 @@ def test_group_quantiles_weighted_equals_expanded(spark):
     }
     assert got == want
 
+    # assume_distinct=True over a groupBy(...).count() domain that keeps
+    # NULL values as their own weighted rows: the NULLs are filtered,
+    # never ranked, so the result still equals the expanded multiset.
+    null_rows = [("a", None)] * 5 + [("b", None)] * 2
+    ndf = spark.createDataFrame(expanded + null_rows, "g string, v double")
+    domain = ndf.groupBy("g", "v").agg(F.count("*").alias("n"))
+    assert domain.where(F.col("v").isNull()).count() == 2
+    got_d = {
+        r["g"]: r["q"]
+        for r in group_quantiles(
+            domain, ["g"], "v", pcts, weight_col="n", assume_distinct=True
+        ).collect()
+    }
+    assert got_d == want
 
-def test_group_quantiles_enum_path_equals_general(spark):
-    """The bounded-key fast path (enum_keys=True) must reproduce the
-    general path bit-for-bit on adversarial data — duplicates, ties
-    across range-partition boundaries, NULLs, single-row groups — for
-    plain, weighted, assume_distinct, and global (keys=[]) invocations,
-    and its returned domain must be the complete weighted multiset
-    INCLUDING null values (stats_mad_outliers' denominator rides on
-    that)."""
-    import random
 
-    from big_data_imdb_classifier_spark.operators.stats import group_quantiles
+def test_mad_outliers_counts_null_prices(spark, tmp_path):
+    """stats_mad_outliers' outlier_frac denominator is the oracle's
+    count(*), so NULL-price rows count in it. The fixture also has a
+    flag whose prices are all NULL (reported with NULL statistics), a
+    NULL flag (dropped by the oracle's joins) and prices mirrored
+    around the median (equal deviations from different values)."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
-    rng = random.Random(23)
-    rows = []
-    for i in range(5000):
-        g = ["a", "b", "c"][i % 3]
-        v = None if i % 97 == 0 else float(rng.choice([1, 2, 2, 3, 5, 8, 13, 21]))
-        rows.append((g, v))
-    rows.append(("solo", 42.0))
-    df = spark.createDataFrame(rows, "g string, v double")
-    pcts = [0.1, 0.25, 0.5, 0.9, 0.99]
+    from .oracle_harness import compare
 
-    gen = {r["g"]: r["q"] for r in group_quantiles(df, ["g"], "v", pcts).collect()}
-    fast, domain = group_quantiles(
-        df, ["g"], "v", pcts, enum_keys=True, return_domain=True
+    rows = [("A", float(p)) for p in range(100, 121)]
+    rows += [("A", 10000.0)] + [("A", None)] * 5
+    rows += [("N", float(p % 7)) for p in range(30)] + [("N", None)]
+    rows += [("X", None)] * 3 + [(None, 5.0)]
+    flags, prices = zip(*rows)
+    path = tmp_path / "lineitem.parquet"
+    pq.write_table(
+        pa.table({
+            "l_returnflag": pa.array(flags, pa.string()),
+            "l_extendedprice": pa.array(prices, pa.float64()),
+        }),
+        path,
     )
-    fast = {r["g"]: r["q"] for r in fast.collect()}
-    assert gen == fast
+    df = plans.QUERIES["stats_mad_outliers"](spark, str(tmp_path))
+    got = {r["l_returnflag"]: r for r in df.collect()}
+    assert set(got) == {"A", "N", "X"}
+    assert got["A"]["n_outliers"] == 1
+    assert got["A"]["outlier_frac"] == round(1 / 27, 4)  # 22 prices + 5 NULLs
+    assert got["X"]["median_price"] is None and got["X"]["n_outliers"] == 0
 
-    # Domain completeness: per-group weights sum to ALL rows (nulls in).
-    dom = {r["g"]: r["t"] for r in domain.groupBy("g").agg(
-        F.sum("_c").alias("t")).collect()}
-    exp = {r["g"]: r["t"] for r in df.groupBy("g").agg(
-        F.count("*").alias("t")).collect()}
-    assert dom == exp
-    null_weight = domain.where(F.col("_v").isNull()).agg(
-        F.sum("_c")).collect()[0][0]
-    assert null_weight == sum(1 for _, v in rows if v is None)
-
-    # Weighted + assume_distinct parity.
-    wdf = df.groupBy("g", "v").agg(F.count("*").alias("n"))
-    gw = {r["g"]: r["q"] for r in group_quantiles(
-        wdf, ["g"], "v", pcts, weight_col="n", assume_distinct=True).collect()}
-    fw = {r["g"]: r["q"] for r in group_quantiles(
-        wdf, ["g"], "v", pcts, weight_col="n", assume_distinct=True,
-        enum_keys=True).collect()}
-    assert gw == fw
-
-    # Global (dummy-key) enum path is FORBIDDEN: it agreed with the
-    # general path on toy domains like this one but scrambled ranks at
-    # sf0.1-sized domains (round 9, histogram_equidepth_price edges) —
-    # the guard turns that silent wrong-answer mode into a loud error.
-    import pytest as _pytest_g
-
-    with _pytest_g.raises(ValueError, match="real key column"):
-        group_quantiles(df, [], "v", pcts, enum_keys=True)
-
-    # The cap guards against misuse on unbounded keys.
-    wide = spark.createDataFrame(
-        [(str(i), float(i)) for i in range(40)], "g string, v double"
-    )
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="bounded-enum cap"):
-        group_quantiles(wide, ["g"], "v", [0.5], enum_keys=True).collect()
-
-
-def test_group_quantiles_enum_dedup_rides_range_exchange(spark):
-    """Plan shape: on the enum path the dedup aggregation must add NO
-    exchange beyond the single range exchange — RangePartitioning on
-    (keys, value) satisfies the aggregate's clustering requirement. If
-    a Spark upgrade ever breaks that, partition ids would still be
-    range-consistent (computed downstream), but the pass would silently
-    pay a second shuffle — this test turns that into a loud failure."""
-    df = spark.range(10000).select(
-        (F.col("id") % 3).cast("string").alias("g"),
-        (F.col("id") % 17).cast("double").alias("v"),
-    )
-    d = df.repartitionByRange(8, "g", "v").groupBy("g", "v").agg(
-        F.sum(F.lit(1)).alias("_c")
-    )
-    plan = d._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Exchange") == 1, plan
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW lineitem AS SELECT * FROM read_parquet('{path}')")
+    compare(df, con, plans.ORACLES["stats_mad_outliers"])
+    con.close()
 
 
 def test_group_quantiles_property_vs_builtin(spark):

@@ -245,6 +245,28 @@ def test_connected_components_min_label(spark):
                    20: 20, 30: 20}
 
 
+def test_connected_components_round_limit_raises(spark):
+    """A 50-node path graph needs 49 propagation rounds: the default
+    round limit must raise rather than return a partial labelling, and
+    a large enough limit yields one component labelled 0."""
+    import pytest
+
+    from big_data_imdb_classifier_spark.operators.text import (
+        connected_components_min_label,
+    )
+
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(49)], "doc_a long, doc_b long"
+    )
+    with pytest.raises(ValueError, match="max_iter=10"):
+        connected_components_min_label(pairs)
+    got = {
+        r.node: r.component
+        for r in connected_components_min_label(pairs, max_iter=60).collect()
+    }
+    assert got == {i: 0 for i in range(50)}
+
+
 def test_near_dup_clusters_against_union_find(spark):
     """On the real corpus: distributed CC must match a driver union-find
     over the same pair list."""
