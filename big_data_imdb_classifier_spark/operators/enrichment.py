@@ -109,8 +109,10 @@ def enrich_with_cache(
     ONLY its fresh rows as new files — O(|fresh|) write IO per batch, no
     rewrite of accumulated history. The anti-join guarantees fresh keys
     are disjoint from cached ones; ``dropDuplicates(key)`` on read is the
-    belt-and-braces against a retried/duplicated append. Missing/None
-    cache_path disables persistence (pure compute).
+    belt-and-braces against a retried/duplicated append. The cache is
+    read with the ``(key, value)`` schema it is written with, so a read
+    runs no schema-inference job. Missing/None cache_path disables
+    persistence (pure compute).
     """
     out_schema = T.StructType(
         [
@@ -121,7 +123,7 @@ def enrich_with_cache(
 
     cached = None
     if cache_path and _hadoop_path_exists(spark, cache_path):
-        cached = spark.read.parquet(cache_path)
+        cached = spark.read.schema(out_schema).parquet(cache_path)
 
     need = df.select(key_col, text_col)
     if cached is not None:
@@ -143,7 +145,11 @@ def enrich_with_cache(
         # not be). The parquet commit protocol keeps task outputs
         # invisible until job commit, so readers never see partial files.
         fresh.write.mode("append").parquet(cache_path)
-        merged = spark.read.parquet(cache_path).dropDuplicates([key_col])
+        merged = (
+            spark.read.schema(out_schema)
+            .parquet(cache_path)
+            .dropDuplicates([key_col])
+        )
     else:
         # no persistence: cached is always None here (it is only read
         # when cache_path is set), so fresh IS the full result

@@ -107,7 +107,8 @@ def corpus_row_count(sf_dir: str, table: str = "embeddings") -> int:
     the small-corpus path it exists to keep cheap. The table may be a
     single file OR a Spark-written directory of part files (any corpus
     the engine itself materialized, e.g. the scale rehearsal's 10×
-    embeddings) — sum ``num_rows`` across part footers in that case.
+    embeddings) — ``sources.footer.footer_row_count`` sums ``num_rows``
+    across part footers in that case.
 
     A ``synthetic://`` sf_dir (the storage-free scale-rehearsal
     DataSources) carries its row counts IN THE URI — parse them instead
@@ -122,13 +123,10 @@ def corpus_row_count(sf_dir: str, table: str = "embeddings") -> int:
     the swallowed exception is logged so a genuinely broken probe
     (permissions, corrupt footer) is visible, not misread as
     'small corpus'."""
-    import glob
     import logging
     import os
 
-    import pyarrow.parquet as pq
-
-    import pyarrow as pa
+    from ..sources.footer import footer_row_count
 
     if sf_dir.startswith("synthetic://"):
         from urllib.parse import parse_qsl, urlparse
@@ -146,11 +144,8 @@ def corpus_row_count(sf_dir: str, table: str = "embeddings") -> int:
 
     path = os.path.join(sf_dir, f"{table}.parquet")
     try:
-        if os.path.isdir(path):
-            parts = glob.glob(os.path.join(path, "*.parquet"))
-            return sum(pq.read_metadata(p).num_rows for p in parts)
-        return pq.read_metadata(path).num_rows
-    except (OSError, pa.ArrowException) as exc:  # missing path / not parquet
+        return footer_row_count(path)
+    except ValueError as exc:  # missing path / not parquet
         logging.getLogger(__name__).warning(
             "corpus_row_count: footer probe of %s failed (%r) — "
             "returning 0, callers keep the exact plan",

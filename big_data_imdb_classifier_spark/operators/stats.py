@@ -18,9 +18,11 @@ NO value buffering anywhere:
    per key per shuffle partition, constant-size, never data-sized. Every
    distinct value now carries its exact per-key global rank interval
    [cum − c, cum).
-3. the ≤ 2·|pcts| target ranks per key — built from the per-key totals,
-   never collected — probe those intervals with a broadcast range join,
-   and linear interpolation ``v_lo + frac·(v_hi − v_lo)`` reproduces
+3. the ≤ 2·|pcts| target ranks per key — generated from the per-key
+   totals by exploding a literal array of the percentiles, never
+   collected — probe those intervals with a broadcast range join; ONE
+   aggregation per key then picks each percentile's lo/hi values, and
+   linear interpolation ``v_lo + frac·(v_hi − v_lo)`` reproduces
    quantile_cont / F.percentile bit-for-bit (frac = 0 degenerates to the
    exact order statistic on both engines).
 
@@ -165,7 +167,6 @@ def group_quantiles(
     """
     if not pcts:
         raise ValueError("group_quantiles: pcts must be non-empty")
-    spark = df.sparkSession
     dummy = not keys
     if dummy:
         df = df.withColumn("_gq_key", F.lit(0))
@@ -198,14 +199,18 @@ def group_quantiles(
         "_cum_prev", F.col("_cum") - F.col("_c")
     )
 
-    n_per_key = totals.withColumnRenamed("_c_tot", "_n")
-    idx = spark.createDataFrame(
-        [(i, p) for i, p in enumerate(pcts)], "_i INT, _p DOUBLE"
+    # One (_i, _p) row per percentile from a literal array: a Generate
+    # over the per-key totals, no local relation to broadcast and join.
+    ranks_p = totals.select(
+        *keys,
+        F.col("_c_tot").alias("_n"),
+        F.posexplode(F.array(*[F.lit(float(p)) for p in pcts])).alias(
+            "_i", "_p"
+        ),
     )
     h = (F.col("_n") - 1) * F.col("_p")
     ranks = (
-        n_per_key.crossJoin(F.broadcast(idx))
-        .select(
+        ranks_p.select(
             *keys,
             "_i",
             F.floor(h).alias("_klo"),
@@ -228,7 +233,7 @@ def group_quantiles(
         .select(*keys, "_i", "_frac",
                 F.col("_s._k").alias("_k"), F.col("_s._side").alias("_side"))
     )
-    # ranks shares vc's lineage (n_per_key aggregates the cumsum frame),
+    # ranks shares vc's lineage (the totals aggregate the cumsum frame),
     # so the probe is a self-join — explicit dataframe aliases keep the
     # key attributes distinguishable.
     vc_a, ranks_a = vc.alias("_gqv"), ranks.alias("_gqr")
@@ -242,26 +247,34 @@ def group_quantiles(
     hit = vc_a.join(F.broadcast(ranks_a), cond).select(
         *[F.col(f"_gqv.{k}") for k in keys], "_v", "_i", "_frac", "_side"
     )
-    per_pct = hit.groupBy(*keys, "_i", "_frac").agg(
-        F.max(F.when(F.col("_side") == "lo", F.col("_v"))).alias("_vlo"),
-        F.max(F.when(F.col("_side") == "hi", F.col("_v"))).alias("_vhi"),
-    )
-    out = (
-        per_pct.select(
-            *keys,
-            "_i",
-            (
-                F.col("_vlo")
-                + F.col("_frac") * (F.col("_vhi") - F.col("_vlo"))
-            ).alias("_edge"),
-        )
-        .groupBy(*keys)
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("_i", "_edge"))),
-                lambda t: t._edge,
-            ).alias("q")
-        )
+    # One aggregation per key: for each percentile index pick its lo and
+    # hi values and its frac, then interpolate into the array in pcts
+    # order.
+    def pick(i, col, side=None):
+        at_i = F.col("_i") == i
+        if side is not None:
+            at_i = at_i & (F.col("_side") == side)
+        return F.max(F.when(at_i, F.col(col)))
+
+    out = hit.groupBy(*keys).agg(
+        *[
+            c
+            for i in range(len(pcts))
+            for c in (
+                pick(i, "_v", "lo").alias(f"_vlo{i}"),
+                pick(i, "_v", "hi").alias(f"_vhi{i}"),
+                pick(i, "_frac").alias(f"_frac{i}"),
+            )
+        ]
+    ).select(
+        *keys,
+        F.array(
+            *[
+                F.col(f"_vlo{i}")
+                + F.col(f"_frac{i}") * (F.col(f"_vhi{i}") - F.col(f"_vlo{i}"))
+                for i in range(len(pcts))
+            ]
+        ).alias("q"),
     )
     if dummy:
         out = out.drop("_gq_key")

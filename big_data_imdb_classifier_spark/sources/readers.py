@@ -3,7 +3,8 @@
 Every reader returns a lazy DataFrame with a declared schema — no
 ``inferSchema`` double-scans (reference anti-pattern, data_utils.py:119),
 no driver-side ``json.load`` of whole files (reference anti-pattern,
-data_utils.py:66-100).
+data_utils.py:66-100). Parquet tables get theirs from the footer
+(``footer.footer_schema``), so building a read runs no Spark job.
 """
 
 from __future__ import annotations
@@ -14,29 +15,35 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .footer import footer_schema
 from .schemas import TESTDATA_SCHEMAS
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one testdata parquet table (columnar scan, pushdown-capable).
 
+    The schema comes from the parquet footer, read on the driver
+    (``footer.footer_schema``), and is passed to ``.schema(...)``, so the
+    read runs no schema-inference job. The footer also tells which
+    timestamp encoding the file uses.
+
     Normalizes timestamp columns to plain ``TimestampType`` (LTZ)
     regardless of how the parquet file encodes them — the testdata's
-    physical encoding has changed between driver rounds, so all three
-    shapes are handled:
+    physical encoding has changed between driver rounds, so every
+    encoding is handled:
 
     - ``TIMESTAMP(NANOS)``: Spark can only scan nanos as nano-epoch longs
       (``spark.sql.legacy.parquet.nanosAsLong``); convert via integer
       division to microseconds — exactly DuckDB's nanos→micros truncation,
       so oracle comparisons agree.
-    - ``TIMESTAMP(MICROS, isAdjustedToUTC=false)``: scanned as
+    - ``TIMESTAMP(MICROS/MILLIS, isAdjustedToUTC=false)``: scanned as
       ``TIMESTAMP_NTZ``, which Spark refuses to cast to numeric types.
       Cast to LTZ. The session timezone is pinned to UTC first so the
       wall-clock field values are reinterpreted as UTC instants — the same
       thing DuckDB does when it runs ``epoch(ts)`` on a naive timestamp —
       independent of the host JVM's default zone.
-    - ``TIMESTAMP(MICROS/MILLIS, isAdjustedToUTC=true)``: already LTZ,
-      untouched.
+    - ``TIMESTAMP(MICROS/MILLIS, isAdjustedToUTC=true)`` and ``INT96``:
+      already LTZ, untouched.
 
     Each conversion is a codegen'd projection on top of the scan;
     pushdown/pruning on other columns is unaffected.
@@ -66,21 +73,23 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             spark.conf.set(conf_key, conf_val)
         except Exception:
             pass  # conf locked down (e.g. Spark Connect policy) — read may still work
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    schema = footer_schema(path)
+    df = spark.read.schema(schema).parquet(path)
     declared = TESTDATA_SCHEMAS.get(name)
     if declared is not None:
-        actual = dict(df.dtypes)
+        actual = {f.name: f.dataType for f in schema}
         for field in declared.fields:
             if not isinstance(field.dataType, T.TimestampType):
                 continue
             scanned = actual.get(field.name)
-            if scanned == "bigint":
+            if isinstance(scanned, T.LongType):
                 # integer `div`: float division would lose precision at
                 # nano-epoch magnitudes (~1.7e18 > 2^53).
                 df = df.withColumn(
                     field.name, F.expr(f"timestamp_micros({field.name} div 1000)")
                 )
-            elif scanned == "timestamp_ntz":
+            elif isinstance(scanned, T.TimestampNTZType):
                 # Session TZ is pinned UTC above, so this cast maps the
                 # naive wall-clock to the identical UTC instant.
                 df = df.withColumn(field.name, F.col(field.name).cast("timestamp"))

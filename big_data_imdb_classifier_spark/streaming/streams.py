@@ -24,13 +24,14 @@ def load_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Streaming readers require an explicit schema, and the testdata's
     physical timestamp encoding has changed across driver rounds
-    (nanos → micros-NTZ), so the schema is NOT hard-coded: a metadata-only
-    batch scan of the same file (parquet footer read, no data IO) reveals
-    how this Spark session surfaces ``ts``, and the stream declares that
-    exact type, then normalizes to TimestampType the same way batch
-    ``load_table`` does — nanos-as-long via integer-div to micros,
-    NTZ via cast in the UTC-pinned session, LTZ untouched. Stream and
-    batch therefore read identical instants by construction.
+    (nanos → micros-NTZ), so the schema is NOT hard-coded: the file's
+    parquet footer, read on the driver with no Spark job
+    (``sources.footer.footer_schema``), gives the type this Spark session
+    scans ``ts`` as, and the stream declares that exact type, then
+    normalizes to TimestampType the same way batch ``load_table`` does —
+    nanos-as-long via integer-div to micros, NTZ via cast in the
+    UTC-pinned session, LTZ untouched. Stream and batch therefore read
+    identical instants by construction.
     """
     for conf_key, conf_val in (
         ("spark.sql.legacy.parquet.nanosAsLong", "true"),
@@ -42,7 +43,9 @@ def load_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             pass
     import os
 
-    scanned = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
+    from ..sources.footer import footer_schema
+
+    scanned = footer_schema(os.path.join(sf_dir, "events.parquet"))
     # The file stream source requires a *directory*; select just the
     # events file out of the shared testdata dir with a glob filter.
     raw = (

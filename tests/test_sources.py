@@ -255,7 +255,10 @@ def test_zordered_write_skips_on_both_columns(spark, tmp_path):
 _TS_MICROS_UTC = [1_704_067_200_000_000, 1_704_070_800_123_456]  # 2024-01-01T00/01 UTC
 
 
-@pytest.mark.parametrize("encoding", ["nanos", "micros_ntz", "micros_utc"])
+@pytest.mark.parametrize(
+    "encoding",
+    ["nanos", "micros_ntz", "micros_utc", "millis_ntz", "millis_utc", "int96"],
+)
 def test_load_table_normalizes_all_timestamp_encodings(spark, tmp_path, encoding):
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -264,16 +267,31 @@ def test_load_table_normalizes_all_timestamp_encodings(spark, tmp_path, encoding
         "nanos": pa.timestamp("ns"),
         "micros_ntz": pa.timestamp("us"),
         "micros_utc": pa.timestamp("us", tz="UTC"),
+        "millis_ntz": pa.timestamp("ms"),
+        "millis_utc": pa.timestamp("ms", tz="UTC"),
+        "int96": pa.timestamp("us", tz="UTC"),
     }[encoding]
-    scale = 1000 if encoding == "nanos" else 1
+    millis = encoding.startswith("millis")
+    # millisecond encodings hold the instants truncated to whole millis
+    want = [v // 1000 * 1000 for v in _TS_MICROS_UTC] if millis else _TS_MICROS_UTC
     tbl = pa.table(
         {
             "event_id": pa.array([1, 2], pa.int64()),
-            "ts": pa.array([v * scale for v in _TS_MICROS_UTC], arrow_type),
+            "ts": pa.array(
+                [
+                    v * 1000 if encoding == "nanos" else v // 1000 if millis else v
+                    for v in _TS_MICROS_UTC
+                ],
+                arrow_type,
+            ),
         }
     )
     sf_dir = str(tmp_path)
-    pq.write_table(tbl, f"{sf_dir}/events.parquet")
+    pq.write_table(
+        tbl,
+        f"{sf_dir}/events.parquet",
+        use_deprecated_int96_timestamps=encoding == "int96",
+    )
 
     df = load_table(spark, sf_dir, "events")
     assert isinstance(df.schema["ts"].dataType, T.TimestampType), (
@@ -289,7 +307,7 @@ def test_load_table_normalizes_all_timestamp_encodings(spark, tmp_path, encoding
         .select(F.unix_micros(F.col("ts")))
         .collect()
     ]
-    assert got == _TS_MICROS_UTC, (encoding, got)
+    assert got == want, (encoding, got)
     # and the epoch-seconds helper (used by sessionization / range joins)
     # must be legal and exact over the normalized column
     from big_data_imdb_classifier_spark.functions.temporal import epoch_seconds
@@ -298,7 +316,121 @@ def test_load_table_normalizes_all_timestamp_encodings(spark, tmp_path, encoding
         r[0]
         for r in df.orderBy("event_id").select(epoch_seconds("ts")).collect()
     ]
-    assert secs == [v // 1_000_000 for v in _TS_MICROS_UTC], (encoding, secs)
+    assert secs == [v // 1_000_000 for v in want], (encoding, secs)
+
+
+def test_footer_schema_equals_inferred_schema(spark, tmp_path):
+    """``footer_schema`` must give exactly the schema Spark infers, so
+    ``load_table`` can skip the inference job: every testdata table, a
+    Spark-written part-file directory (schema stored in the footer), a
+    pyarrow all-NULL column (Spark: int, Arrow: null), INT96 (Spark:
+    timestamp, Arrow: int64 nanos) and the other timestamp encodings.
+    A type with no mapping, or a path with no parquet, raises."""
+    import glob
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from big_data_imdb_classifier_spark.sources.footer import footer_schema
+
+    from .conftest import TESTDATA_ROOT
+
+    paths = sorted(glob.glob(os.path.join(TESTDATA_ROOT, "*", "*.parquet")))
+    assert paths, TESTDATA_ROOT
+
+    spark_dir = str(tmp_path / "spark_written.parquet")
+    spark.range(20).selectExpr(
+        "id",
+        "cast(id as int) AS i",
+        "timestamp_micros(id) AS ts",
+        "array(id) AS a",
+        "map('k', id) AS m",
+        "named_struct('x', id, 'y', cast(id as string)) AS s",
+        "cast(id as decimal(5, 1)) AS d",
+    ).repartition(3).write.parquet(spark_dir)
+    paths.append(spark_dir)
+
+    mixed = str(tmp_path / "mixed.parquet")
+    pq.write_table(
+        pa.table(
+            {
+                "nulls": pa.array([None, None], pa.null()),
+                "i8": pa.array([1, 2], pa.int8()),
+                "u32": pa.array([1, 2], pa.uint32()),
+                "dec": pa.array([1, 2], pa.decimal128(10, 2)),
+                "bin": pa.array([b"a", b"b"]),
+                "ts_ms": pa.array([1, 2], pa.timestamp("ms")),
+                "ts_ms_utc": pa.array([1, 2], pa.timestamp("ms", tz="UTC")),
+                "ts_ns": pa.array([1, 2], pa.timestamp("ns")),
+                "lst": pa.array([[1.0], [2.0]], pa.list_(pa.float32())),
+                "st": pa.array([{"a": 1, "b": "x"}] * 2),
+                "mp": pa.array([[("k", 1)]] * 2, pa.map_(pa.string(), pa.int64())),
+            }
+        ),
+        mixed,
+    )
+    int96 = str(tmp_path / "int96.parquet")
+    pq.write_table(
+        pa.table({"ts": pa.array([1, 2], pa.timestamp("us"))}),
+        int96,
+        use_deprecated_int96_timestamps=True,
+    )
+    paths += [mixed, int96]
+
+    for path in paths:
+        assert footer_schema(path) == spark.read.parquet(path).schema, path
+    got = footer_schema(mixed)
+    assert got["nulls"].dataType == T.IntegerType()
+    assert got["ts_ns"].dataType == T.LongType()
+    assert footer_schema(int96)["ts"].dataType == T.TimestampType()
+
+    unmapped = str(tmp_path / "time.parquet")
+    pq.write_table(pa.table({"t": pa.array([1, 2], pa.time32("ms"))}), unmapped)
+    with pytest.raises(ValueError, match=r"'t'.*Time.*time\.parquet"):
+        footer_schema(unmapped)
+    with pytest.raises(ValueError, match="nope"):
+        footer_schema(str(tmp_path / "nope.parquet"))
+    garbage = tmp_path / "garbage.parquet"
+    garbage.write_bytes(b"not parquet")
+    with pytest.raises(ValueError, match="garbage"):
+        footer_schema(str(garbage))
+
+
+def test_table_reads_run_no_spark_job(spark):
+    """Building a ``load_table`` read or the events stream runs no Spark
+    job: both take their schema from the parquet footer. The same probe
+    sees the inference job of a plain ``spark.read.parquet``, so a zero
+    is not the probe missing jobs."""
+    import os
+
+    from big_data_imdb_classifier_spark.sources.schemas import TABLE_NAMES
+    from big_data_imdb_classifier_spark.streaming.streams import (
+        load_events_stream,
+    )
+
+    sc = spark.sparkContext
+
+    def jobs_of(group, build):
+        sc.setJobGroup(group, group)
+        try:
+            build()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return list(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert jobs_of(
+        "footer-test-infer",
+        lambda: spark.read.parquet(os.path.join(SF_SMOKE, "region.parquet")),
+    )
+    for name in TABLE_NAMES:
+        assert jobs_of(
+            f"footer-test-{name}", lambda: load_table(spark, SF_SMOKE, name)
+        ) == [], name
+    assert jobs_of(
+        "footer-test-stream", lambda: load_events_stream(spark, SF_SMOKE)
+    ) == []
 
 
 class TestSyntheticEventsDataSource:

@@ -122,6 +122,38 @@ def test_group_quantiles_matches_builtin_percentile(spark):
     assert got_g == want_g
 
 
+def test_group_quantiles_rank_side_and_single_tail_aggregation(spark):
+    """The rank rows come from exploding a literal array over the per-key
+    totals — no local relation (LocalTableScan) broadcast into a
+    BroadcastNestedLoopJoin — and one aggregation per key follows the
+    rank-probe join (no per-percentile aggregation, then a collect)."""
+    from big_data_imdb_classifier_spark.operators.stats import group_quantiles
+
+    df = spark.range(1000).selectExpr("id % 3 AS g", "cast(id % 17 AS double) AS v")
+    for keys in (["g"], []):
+        q = group_quantiles(df, keys, "v", [0.1, 0.5, 0.9])
+        # Aggregates between the root and the topmost join (the probe).
+        node, aggs = q._jdf.queryExecution().optimizedPlan(), 0
+        while node.nodeName() != "Join":
+            aggs += node.nodeName() == "Aggregate"
+            assert node.children().size() == 1, node.toString()
+            node = node.children().head()
+        assert aggs == 1, q._jdf.queryExecution().optimizedPlan().toString()
+        rank_side = node.children().apply(1).treeString()
+        assert "LocalRelation" not in rank_side, rank_side
+        assert "Join" not in rank_side, rank_side
+    # Keyed, the probe is an equi-join: no nested loop anywhere. (The
+    # global probe has only the range condition, so it is one.)
+    physical = (
+        group_quantiles(df, ["g"], "v", [0.1, 0.5, 0.9])
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+    assert "LocalTableScan" not in physical, physical
+    assert "BroadcastNestedLoopJoin" not in physical, physical
+
+
 def test_group_quantiles_weighted_equals_expanded(spark):
     """The weight_col pre-aggregated entry point must equal quantiles
     over the row-expanded multiset — rank intervals are cumulative
