@@ -54,7 +54,7 @@ uniform phantom drift on unchanged plans caused by background load):
   as split secondary series in the detail record. NOTE on
   comparability: r1–r4 values timed everything but never isolated or
   split construction; r5 values are execution-only. Cross-round
-  comparisons must respect the protocol epochs tagged in BENCHLOG.md.
+  comparisons must respect these protocol epochs.
 """
 
 from __future__ import annotations
@@ -115,7 +115,7 @@ HEADLINE = [
     "sim_maxsim_multivector",            # late-interaction MaxSim scoring
     "event_session_window_builtin",      # native SessionWindow aggregate
     "dedup_embedding_semdedup",          # cluster-local semantic dedup
-    # round-6 additions (BENCHLOG r6: headline grew 36 → 39)
+    # round-6 additions (headline grew 36 → 39)
     "text_bm25_topk",                    # BM25 retrieval, posting-list-bounded
     "layout_bucketed_join_colocated",    # bucketed fact-fact join, zero exchange
     "fuzzy_join_fastss_d1",              # deletion-neighborhood edit-distance join
@@ -186,7 +186,7 @@ def _calibrate(spark, reps: int = 3, agg: str = "median") -> float:
 
 
 # How many of the sweep's slowest queries get an isolated re-timing in
-# --all mode (the canonical per-query series for BENCHLOG regression
+# --all mode (the canonical per-query series for regression
 # calls — in-sweep numbers keep sweep-position noise even with the warm
 # rep + GC protocol).
 ISOLATE_SLOWEST = 20
@@ -222,7 +222,7 @@ def main() -> None:
         return t1 - t0, t2 - t1
 
     # `python bench.py --all` times EVERY registry query (the secondary
-    # regression ledger, BENCHLOG.md); the driver's default run stays the
+    # regression series); the driver's default run stays the
     # headline set.
     if "--all" in sys.argv:
         names = sorted(plans.QUERIES)
@@ -257,8 +257,8 @@ def main() -> None:
     # pair cannot normalize a sweep whose host speed DRIFTS mid-run (the
     # r8 degraded-host epoch made every early-window query a spurious
     # "mover"). A probe every PROBE_EVERY queries gives each query a
-    # nearest-in-time host-speed reading; bench_compare uses the series
-    # when both sides carry one. Round-9 hardening (the r8 series was
+    # nearest-in-time host-speed reading; an A/B comparison can use the
+    # series when both sides carry one. Round-9 hardening (the r8 series was
     # 1-rep, un-GC'd, and over-read sweep-internal residue by ~3× —
     # 203/221 spurious "movers" when used as a divisor): GC first, then
     # min-of-2 samples, so the reading tracks HOST speed, not the heap
@@ -275,7 +275,7 @@ def main() -> None:
     # rep, keyed by query name in the detail record (`probe_at`). The
     # boundary pair and the --all series can only normalize per
     # boundary/window; on a host whose speed bounces at minute
-    # granularity (BENCHLOG r8/r9 epochs) a per-query stamp lets the
+    # granularity (rounds 8 and 9) a per-query stamp lets the
     # A/B comparison self-normalize each query against the host speed
     # it actually ran under. Additive field only — the probe runs
     # OUTSIDE the timed region, the compact line is unchanged, and the
@@ -311,7 +311,7 @@ def main() -> None:
     calibration_end = _calibrate(spark)
 
     # --all mode: isolated re-timing of the sweep's slowest tail — the
-    # CANONICAL per-query series for regression calls (BENCHLOG r7
+    # CANONICAL per-query series for regression calls (round-7
     # protocol). Each gets its own GC + warm rep + median-of-3, in
     # ascending-cost order, long after whatever sweep position it
     # originally ran in.

@@ -68,15 +68,6 @@ def anti_join(df: DataFrame, keys_df: DataFrame, on: str | list[str]) -> DataFra
     return df.join(keys_df, on, "left_anti")
 
 
-def union_shards(shards: Sequence[DataFrame]) -> DataFrame:
-    """UNION ALL by name (U1) — schema-drift-safe, unlike the reference's
-    positional ``union`` loop (data_utils.py:145-152)."""
-    out = shards[0]
-    for s in shards[1:]:
-        out = out.unionByName(s)
-    return out
-
-
 def column_means(df: DataFrame, cols: Sequence[str]) -> dict[str, float]:
     """Means of ``cols`` (cast to double) in ONE aggregate job — the
     reference runs one ``agg({col:'avg'}).collect()`` job PER COLUMN

@@ -133,16 +133,6 @@ def quality_score_col(text: Column | str, stopwords: list[str]) -> Column:
     return (0.4 * length_score + 0.4 * stop_score + 0.2 * (1 - punct_penalty))
 
 
-def lang_scores(text: Column | str) -> dict[str, Column]:
-    """Distinct-marker-overlap score per language."""
-    distinct_toks = F.array_distinct(tokens_col(text))
-    out = {}
-    for lang, markers in LANG_MARKERS.items():
-        m = F.array(*[F.lit(x) for x in markers])
-        out[lang] = F.size(F.array_intersect(distinct_toks, m))
-    return out
-
-
 def lang_id_col(text: Column | str) -> Column:
     """Argmax language with deterministic alphabetical tiebreak: the
     candidate whose (score, reversed-alpha) pair is greatest wins, i.e.
@@ -233,10 +223,6 @@ def minhash_col(shingles: Column, seed: int) -> Column:
     return F.array_min(
         F.transform(shingles, lambda s: F.md5(F.concat(F.lit(f"{seed}:"), s)))
     )
-
-
-def minhash_signature_cols(shingles: Column, num_hashes: int) -> list[Column]:
-    return [minhash_col(shingles, i) for i in range(num_hashes)]
 
 
 def minhash_lsh_near_dup_pairs(
@@ -465,23 +451,6 @@ def text_features_inline(text_col: str, stopwords: list[str]):
         )
 
     return F.transform(stage1, final)
-
-
-def with_text_features(
-    df: DataFrame, text_col: str = "text", stopwords: list[str] | None = None
-) -> DataFrame:
-    """Convenience: attach the full text-analysis feature set."""
-    sw = stopwords or LANG_MARKERS["en"]
-    return (
-        df.withColumn("n_tokens", token_count_col(text_col))
-        .withColumn("n_bpe_tokens", bpe_ish_token_count_col(text_col))
-        .withColumn("punct_ratio", punct_ratio_col(text_col))
-        .withColumn("stopword_ratio", stopword_ratio_col(text_col, sw))
-        .withColumn("mean_token_len", mean_token_len_col(text_col))
-        .withColumn("quality", quality_score_col(text_col, sw))
-        .withColumn("lang_pred", lang_id_col(text_col))
-        .withColumn("fingerprint", fingerprint_col(text_col))
-    )
 
 
 def simhash_near_dup_pairs(

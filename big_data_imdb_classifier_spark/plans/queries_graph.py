@@ -289,7 +289,7 @@ def graph_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     # broadcast it and re-exchanged the WHOLE cached edge list by src
     # on every hop — profiled at sf0.1 as a 22.95 MB edge-sized shuffle
     # written (and read) per hop at hops 2 and 3
-    # (GRAPHPROFILE_r10.json, stages 97/115), violating this query's
+    # (round-10 job profile, commit 0ea1141), violating this query's
     # own design claim that per-hop shuffles are node-sized. Aggregating
     # to (src, dsts) leaves the cache hash-partitioned on src — the hop
     # join's distribution requirement — so EnsureRequirements plans

@@ -21,7 +21,7 @@ The Spark side renders the derivation as a distributed frame (part ×
 4-element explode + lineitem distinct, one union); the DuckDB oracle
 renders the IDENTICAL formulas as a CTE prefix shared by all five
 queries. The only driver-side scalar is the 1-row supplier count
-(broadcast crossJoin, whitelisted in tools/plan_audit.py).
+(broadcast crossJoin, whitelisted in tests/test_oracle_parity.py).
 
 At 100 TB the derivation is scan-shaped: the generated branch is a
 narrow projection of part (embarrassingly parallel), the observed

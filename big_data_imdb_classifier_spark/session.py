@@ -49,6 +49,10 @@ _DEFAULTS = {
     "spark.ui.enabled": "false",
 }
 
+# Logger of the class that checks every file-source path for a streaming
+# sink's metadata directory (Spark 4.1 package).
+FILE_STREAM_SINK_LOGGER = "org.apache.spark.sql.execution.streaming.sinks.FileStreamSink"
+
 
 def default_parallelism() -> int:
     """Shuffle-partition count: env override, else CPU count."""
@@ -85,6 +89,11 @@ def get_spark(
             builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    # A glob read first looks for a streaming sink's metadata directory at
+    # the glob path and logs a WARN with a FileNotFoundException stack
+    # trace when there is none, i.e. on every glob read.
+    log4j = spark.sparkContext._jvm.org.apache.logging.log4j
+    log4j.core.config.Configurator.setLevel(FILE_STREAM_SINK_LOGGER, log4j.Level.ERROR)
     return spark
 
 
@@ -105,8 +114,7 @@ def cluster_conf(
       a full-input shuffle then lands ~12 GB per partition pre-AQE, so
       wide stages rely on AQE coalescing DOWN being cheap while spilling
       stages should instead raise this toward input_bytes / 256 MB —
-      the number is a floor, not a ceiling, and the plan-audit flags the
-      shapes that would need it.
+      the number is a floor, not a ceiling.
     * maxPartitionBytes 256m: scan tasks sized so a 100 TB table yields
       ~400k scan tasks — large enough to amortize task overhead, small
       enough that one straggling row-group doesn't stall a stage.

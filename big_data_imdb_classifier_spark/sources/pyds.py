@@ -58,8 +58,7 @@ class SyntheticEventsDataSource(DataSource):
     ``zipf`` (default 0: uniform user keys; 1: Zipf s≈1 — hot user
     ~1/ln(users) of ALL events; 2: HEAVY Zipf s=1.5 — hot user ~29% of
     all events, the shape that breaks per-key windows and sort-merge
-    joins at scale; used by the skew rehearsal,
-    tools/scale_rehearsal.py).
+    joins at scale; used by the skew rehearsal of commit 40a73ee).
     """
 
     @classmethod
@@ -347,7 +346,7 @@ class SyntheticDocumentsDataSource(DataSource):
     decades beyond any on-disk parquet.
 
     The corpus is structured EXACTLY like the on-disk 10× fabrication
-    (tools/scale_rehearsal.build_sf1_docs): conceptually ``replicas``
+    of the scale rehearsal (commit 3c4ea60): conceptually ``replicas``
     isolated copies of a ``base_rows`` base corpus. Every token of
     replica r carries the prefix ``r{r}_``, so shingles, fingerprints,
     MinHash bands and Jaccard prefixes NEVER collide across replicas —

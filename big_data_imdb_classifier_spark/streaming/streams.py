@@ -559,7 +559,7 @@ def pattern_funnel_stream(
         # is still 0, so every batch-1 key got a 1970-epoch deadline
         # and was mass-evicted (state destroyed, then recreated) the
         # moment the watermark advanced — the bulk of the −62%
-        # STREAMBENCH_r07 regression, and a cross-batch correctness
+        # round-7 streaming-bench regression, and a cross-batch correctness
         # hole for any key whose history spanned the evict. The store
         # timeout re-arms LAZILY (only once the policy deadline drifts
         # a slack window past the armed one); a too-early firing

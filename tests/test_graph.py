@@ -104,9 +104,9 @@ def test_bfs_hop_join_reuses_adjacency_partitioning(spark):
     must plan ZERO exchange on the adjacency side — only the frontier
     (node rows) shuffles. The r9 shape cached a flat pair list and the
     planner re-exchanged the whole edge list by src on every hop
-    (GRAPHPROFILE_r10.json: a 22.95 MB edge shuffle written per hop at
-    sf0.1); this pins the fixed shape by counting Exchange nodes in the
-    hop-join plan: exactly one (the frontier side)."""
+    (round-10 job profile, commit 0ea1141: a 22.95 MB edge shuffle
+    written per hop at sf0.1); this pins the fixed shape by counting
+    Exchange nodes in the hop-join plan: exactly one (the frontier side)."""
     pairs = spark.createDataFrame(
         [(1, 2), (1, 3), (2, 3), (3, 4), (4, 1), (2, 4)], "src int, dst int"
     )

@@ -3,7 +3,7 @@ cluster-scale overlay."""
 
 from __future__ import annotations
 
-from big_data_imdb_classifier_spark.session import cluster_conf
+from big_data_imdb_classifier_spark.session import FILE_STREAM_SINK_LOGGER, cluster_conf
 
 
 def test_cluster_conf_scales_with_fleet_shape():
@@ -20,6 +20,16 @@ def test_cluster_conf_scales_with_fleet_shape():
 
 def test_session_timezone_is_utc(spark):
     assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
+
+
+def test_file_stream_sink_logger_is_quiet(spark):
+    """Glob reads would log a metadata-directory WARN with a stack trace;
+    the logger that writes it is set to ERROR, and it names a class this
+    Spark version has."""
+    jvm = spark.sparkContext._jvm
+    jvm.java.lang.Class.forName(FILE_STREAM_SINK_LOGGER)
+    level = jvm.org.apache.logging.log4j.LogManager.getLogger(FILE_STREAM_SINK_LOGGER).getLevel()
+    assert level.toString() == "ERROR"
 
 
 def test_cluster_conf_runs_on_local_cluster_master():
