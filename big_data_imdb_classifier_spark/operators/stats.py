@@ -12,12 +12,13 @@ NO value buffering anywhere:
 
 1. groupBy (keys, value) → counts — the only full-data shuffle; partial
    aggregation absorbs duplicate values map-side.
-2. range-repartition the distinct (keys, value) rows and run a
-   TWO-LEVEL PREFIX SUM: a within-partition running count (window over
-   the partition id) plus a per-(key, partition) offset frame — one row
-   per key per shuffle partition, constant-size, never data-sized. Every
-   distinct value now carries its exact per-key global rank interval
-   [cum − c, cum).
+2. a TWO-LEVEL PREFIX SUM over the distinct (keys, value) rows
+   (``distributed_cumsum``, Blelloch's scan with blocks defined by the
+   data): each row's block is an equal-width bucket of its value
+   between the key's exact min and max; a running count within each
+   block plus a per-(key, block) offset frame — one row per key per
+   block, constant-size, never data-sized. Every distinct value now
+   carries its exact per-key global rank interval [cum − c, cum).
 3. the ≤ 2·|pcts| target ranks per key — generated from the per-key
    totals by exploding a literal array of the percentiles, never
    collected — probe those intervals with a broadcast range join; ONE
@@ -26,17 +27,66 @@ NO value buffering anywhere:
    quantile_cont / F.percentile bit-for-bit (frac = 0 degenerates to the
    exact order statistic on both engines).
 
-Cost model at 100 TB: one shuffle of the distinct value domain + two
-constant-size broadcast joins, vs. the builtin's one shuffle of ALL
-values into |groups| buffers. The same machinery serves the global case
-(keys=[]) — plans/queries_stats.py's equi-depth histogram edges.
+Blocks are a pure function of the row and of exact aggregates, never a
+physical partition id: a branch that re-evaluates the input, an AQE
+decision or a cached input cannot move a row to another block.
+
+Cost model at 100 TB: one shuffle of the distinct value domain, small
+bounds and block-total aggregates, and constant-size broadcast joins,
+vs. the builtin's one shuffle of ALL values into |groups| buffers. The
+same machinery serves the global case (keys=[]) — plans/queries_stats.
+py's equi-depth histogram edges.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import NumericType
 from pyspark.sql.window import Window
+
+
+def _bucketed(df: DataFrame, keys: list[str], order_col: str, span=None):
+    """The block step of the two-level scan: ``df`` plus ``_b``, the
+    equal-width bucket of ``order_col`` between the exact finite
+    ``min`` and ``max`` of its ``keys`` group in ``span`` (default
+    ``df``).
+
+    ``_b`` is a pure function of the row and of exact aggregates, so
+    every branch that re-evaluates it agrees, whatever the planner
+    reuses or caches. It is monotone in Spark's ascending order: NULL
+    and −Infinity fall in the first bucket, +Infinity and NaN in the
+    last, and values outside ``span``'s range in the end buckets; the
+    sort inside a bucket orders them. The bucket count is 4 ×
+    ``spark.sql.shuffle.partitions``, so value skew spreads over
+    several buckets per reducer.
+    """
+    dtype = df.schema[order_col].dataType
+    if not isinstance(dtype, NumericType):
+        raise ValueError(
+            f"order column {order_col!r} has type {dtype.simpleString()}; "
+            "the prefix scan buckets numeric order values only"
+        )
+    x = F.col(order_col).cast("double")
+    finite = F.when(F.abs(x) < float("inf"), x)
+    # The NaN flag is part of the bounds key, so that the global case
+    # (no keys) still joins its bounds on a real column: a join on a
+    # literal key plans as a cross join.
+    bounds = (df if span is None else span).groupBy(
+        *keys, F.isnan(x).alias("_nan")
+    ).agg(F.min(finite).alias("_lo"), F.max(finite).alias("_hi"))
+    d = df.withColumn("_nan", F.isnan(x)).join(
+        F.broadcast(bounds), [*keys, "_nan"], "left"
+    )
+    conf = df.sparkSession.conf
+    nb = 4 * max(int(conf.get("spark.sql.shuffle.partitions")), 1)
+    lo, hi = F.col("_lo"), F.col("_hi")
+    b = (
+        F.when(F.col("_nan") | (x >= hi), nb - 1)
+        .when(x > lo, F.least(F.floor((x - lo) / (hi - lo) * nb), F.lit(nb - 1)))
+        .otherwise(0)
+    )
+    return d.withColumn("_b", b.cast("int")).drop("_nan", "_lo", "_hi")
 
 
 def distributed_cumsum(
@@ -50,86 +100,60 @@ def distributed_cumsum(
     ``keys`` group (global when ``keys`` is empty) WITHOUT a
     single-partition window — the two-level prefix sum every global
     cumulative statistic in this engine rides on (quantile ranks here,
-    the sweep-line concurrency profile in operators/relational.py).
+    Gini, KS, sequence packing and quantile normalisation in plans/).
 
-    Shape: range-repartition by (keys, order_col); within-partition
-    running sums (one window per partition id, data never crosses
-    executors); then a per-(key, shuffle-partition) offset frame — one
-    row per key per partition, constant-size, never data-sized — whose
-    own prefix sum broadcasts back onto the rows. At 100 TB the only
-    data-sized movements are the range shuffle and a broadcast join; no
-    reducer ever holds more than its range slice.
+    Shape (Blelloch's two-level scan, blocks defined by the data): each
+    row gets an equal-width bucket of ``order_col`` between its key's
+    exact min and max (``_bucketed``); one hash exchange on (keys,
+    bucket) feeds both the within-bucket running-sum window and the
+    per-(key, bucket) totals. Those totals — one row per key per
+    bucket, constant-size, never data-sized — get their own prefix sum
+    and broadcast back as each bucket's offset. The result does not
+    depend on partition order, exchange reuse or caching of ``df``.
+
+    ``order_col`` must be numeric (``ValueError`` otherwise); NULL,
+    NaN and ±Infinity order values take their place in Spark's
+    ascending sort order. Rows with a NULL key are dropped.
 
     PRECONDITION: ``(keys, order_col)`` must be unique per row (pre-
     aggregate ties first) — duplicate order keys would make the running
-    sum partition-order dependent and nondeterministic.
-
-    The rows and their offsets must see ONE evaluation of the range
-    exchange, which the planner's exchange reuse provides for a lazy
-    input. Over a ``persist()``-ed input the branches each plan their
-    own range exchange, the sampled bounds differ, ``_pid`` disagrees
-    and quantiles come back wrong — do not cache the input.
+    sum order dependent and nondeterministic.
 
     Returns ``df``'s columns plus ``{m}_cum`` for each measure. With
     ``with_totals=True``, returns ``(result, totals)`` where totals is
-    one row per key carrying ``{m}_tot`` — derived from the CONSTANT-
-    SIZE per-partition offset frame, not from the data-sized result, so
-    consumers that need per-key grand totals don't re-derive the whole
-    cumsum lineage (a second full upstream recomputation when the plan
-    can't reuse the exchange).
+    one row per key carrying ``{m}_tot`` — one aggregate of ``df``, not
+    derived from the data-sized result.
     """
-    spark = df.sparkSession
-    dummy = not keys
-    if dummy:
-        df = df.withColumn("_dc_key", F.lit(0))
-        keys = ["_dc_key"]
-    nparts = max(
-        int(spark.conf.get("spark.sql.shuffle.partitions", "32")), 1
-    )
-    d = df.repartitionByRange(nparts, *keys, order_col).withColumn(
-        "_pid", F.spark_partition_id()
-    )
-    w_local = Window.partitionBy(*keys, "_pid").orderBy(order_col)
-    for m in measures:
-        d = d.withColumn(f"_loc_{m}", F.sum(m).over(w_local))
-    # Partition totals from the RAW measure (not max of the running sum,
-    # which would be wrong for signed measures).
-    ptot = d.groupBy(*keys, "_pid").agg(
-        *[F.sum(m).alias(f"_pt_{m}") for m in measures]
-    )
+    d = _bucketed(df, keys, order_col)
     w_ofs = (
         Window.partitionBy(*keys)
-        .orderBy("_pid")
+        .orderBy("_b")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    ofs = ptot.select(
+    ofs = d.groupBy(*keys, "_b").agg(*[F.sum(m).alias(m) for m in measures])
+    ofs = ofs.select(
         *keys,
-        "_pid",
+        "_b",
         *[
-            F.coalesce(F.sum(f"_pt_{m}").over(w_ofs), F.lit(0)).alias(
-                f"_of_{m}"
-            )
+            F.coalesce(F.sum(m).over(w_ofs), F.lit(0)).alias(f"_of_{m}")
             for m in measures
         ],
     )
-    d = d.join(F.broadcast(ofs), keys + ["_pid"])
-    for m in measures:
-        d = d.withColumn(f"{m}_cum", F.col(f"_loc_{m}") + F.col(f"_of_{m}"))
-    d = d.drop(
-        "_pid",
-        *[f"_loc_{m}" for m in measures],
-        *[f"_of_{m}" for m in measures],
+    w = Window.partitionBy(*keys, "_b").orderBy(order_col)
+    loc = d.select(
+        *df.columns, "_b", *[F.sum(m).over(w).alias(f"_lc_{m}") for m in measures]
     )
-    if dummy:
-        d = d.drop("_dc_key")
+    out = loc.join(F.broadcast(ofs), [*keys, "_b"]).select(
+        *df.columns,
+        *[
+            (F.col(f"_lc_{m}") + F.col(f"_of_{m}")).alias(f"{m}_cum")
+            for m in measures
+        ],
+    )
     if not with_totals:
-        return d
-    totals = ptot.groupBy(*keys).agg(
-        *[F.sum(f"_pt_{m}").alias(f"{m}_tot") for m in measures]
-    )
-    if dummy:
-        totals = totals.drop("_dc_key")
-    return d, totals
+        return out
+    tots = [F.sum(m).alias(f"{m}_tot") for m in measures]
+    return out, df.groupBy(*keys).agg(*tots)
 
 
 def group_quantiles(
@@ -192,8 +216,8 @@ def group_quantiles(
     # (keys, _v) is unique by construction — the distributed_cumsum
     # precondition holds. _c_cum is each distinct value's exact global
     # per-key rank upper bound; [_cum_prev, _cum) its rank interval.
-    # Totals come from the constant-size offset frame (with_totals), so
-    # the rank-probe side doesn't re-derive the data-sized cumsum plan.
+    # Totals are one aggregate of the input (with_totals), so the
+    # rank-probe side has no join below it.
     vc, totals = distributed_cumsum(vc, keys, "_v", ["_c"], with_totals=True)
     vc = vc.withColumnRenamed("_c_cum", "_cum").withColumn(
         "_cum_prev", F.col("_cum") - F.col("_c")
@@ -233,7 +257,7 @@ def group_quantiles(
         .select(*keys, "_i", "_frac",
                 F.col("_s._k").alias("_k"), F.col("_s._side").alias("_side"))
     )
-    # ranks shares vc's lineage (the totals aggregate the cumsum frame),
+    # ranks shares vc's lineage (the totals aggregate the same input),
     # so the probe is a self-join — explicit dataframe aliases keep the
     # key attributes distinguishable.
     vc_a, ranks_a = vc.alias("_gqv"), ranks.alias("_gqr")
@@ -306,19 +330,20 @@ def rank_value_lookup(
     scalar, quadratic at 100 TB. This is instead the UNION + TWO-LEVEL
     CARRY-FORWARD shape (the global sibling of operators.relational.
     asof_join, which carries within key groups; rank space has no key,
-    so cross-partition carry uses the same constant-size offset-frame
-    trick as distributed_cumsum): range-partition both streams together
-    on (pos, tag) — markers sort before probes at equal positions, so
-    "≤" ties resolve to the marker — run last(ignorenulls) within each
-    partition, and stitch partitions with a per-partition last-marker
-    frame (one row per shuffle partition) whose own carry-forward
-    broadcasts back. One range shuffle of markers+probes, two
-    constant-size frames; no nested loop anywhere.
+    so the carry crosses blocks the way distributed_cumsum's offsets
+    do): markers and probes share one stream ordered by (pos, tag) —
+    markers sort before probes at equal positions, so "≤" ties resolve
+    to the marker — split into equal-width buckets of the markers' pos
+    range (``_bucketed``); last(ignorenulls) runs within each bucket,
+    and a per-bucket last-marker frame (one row per bucket) carries
+    forward and broadcasts back to probes that precede their bucket's
+    first marker. One hash shuffle of markers+probes, small aggregates; no
+    nested loop anywhere. ``pos`` must be numeric; NULL, NaN and
+    ±Infinity positions take their place in Spark's ascending order.
 
     Markers must have distinct positions. Probes keep all their
     columns; the looked-up value lands in ``out_col``.
     """
-    spark = markers.sparkSession
     vtype = dict(markers.dtypes)[val_col]
     m = markers.select(
         F.col(pos_col).alias("_pos"),
@@ -330,42 +355,28 @@ def rank_value_lookup(
         .withColumn("_tag", F.lit(1))
         .withColumn("_mv", F.lit(None).cast(vtype))
     )
+    # Buckets split the markers' range: a probe beyond it reads the
+    # first or the last marker's bucket.
     u = m.unionByName(p, allowMissingColumns=True)
-    nparts = max(
-        int(spark.conf.get("spark.sql.shuffle.partitions", "32")), 1
-    )
-    d = u.repartitionByRange(nparts, "_pos", "_tag").withColumn(
-        "_pid", F.spark_partition_id()
-    )
-    w_local = (
-        Window.partitionBy("_pid")
+    d = _bucketed(u, [], "_pos", span=m)
+    # Last non-NULL marker value per bucket, carried forward over the
+    # small bucket frame so that a probe before its bucket's first
+    # marker reads the previous buckets' last.
+    w_ofs = Window.orderBy("_b").rowsBetween(Window.unboundedPreceding, -1)
+    ofs = d.groupBy("_b").agg(
+        F.max_by("_mv", F.when(F.col("_mv").isNotNull(), F.col("_pos")))
+        .alias("_bl")
+    ).select("_b", F.last("_bl", ignorenulls=True).over(w_ofs).alias("_ofs"))
+    w = (
+        Window.partitionBy("_b")
         .orderBy("_pos", "_tag")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    d = d.withColumn("_cf", F.last("_mv", ignorenulls=True).over(w_local))
-    # Last marker per partition (absent for marker-less partitions),
-    # carried forward over the tiny pid frame so probes landing before
-    # their partition's first marker read the previous partition's last.
-    plast = (
-        d.where(F.col("_tag") == 0)
-        .groupBy("_pid")
-        .agg(F.max_by("_mv", "_pos").alias("_pl"))
-    )
-    pids = d.select("_pid").distinct()
-    w_ofs = (
-        Window.orderBy("_pid")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    ofs = (
-        pids.join(F.broadcast(plast), "_pid", "left")
-        .withColumn("_ofs", F.last("_pl", ignorenulls=True).over(w_ofs))
-        .select("_pid", "_ofs")
-    )
-    out = (
-        d.where(F.col("_tag") == 1)
-        .join(F.broadcast(ofs), "_pid")
+    return (
+        d.withColumn("_cf", F.last("_mv", ignorenulls=True).over(w))
+        .where(F.col("_tag") == 1)
+        .join(F.broadcast(ofs), "_b")
         .withColumn(out_col, F.coalesce("_cf", "_ofs"))
-        .drop("_pid", "_tag", "_mv", "_cf", "_ofs")
+        .drop("_b", "_tag", "_mv", "_cf", "_ofs")
         .withColumnRenamed("_pos", pos_col)
     )
-    return out

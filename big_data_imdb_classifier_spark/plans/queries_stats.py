@@ -438,15 +438,15 @@ def histogram_equidepth_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     array(...))`` aggregate ships every value to one ObjectHashAggregate
     reducer, the engine's last single-reducer bottleneck before this
     rewrite). Shape: (1) groupBy value → (value, count) — the only
-    full-data shuffle, partial aggs absorb duplicates map-side; (2)
-    range-repartition the distinct values and two-level prefix sum
-    (within-partition running count + a 32-row per-partition offset
-    frame, the sweep-line pattern from event_session_concurrency) gives
-    every distinct value its exact global rank interval [cum−c, cum);
-    (3) the ≤18 target ranks (floor/ceil of h=(n−1)p, built from the
-    1-row total via crossJoin, never collected) probe that interval with
-    a broadcast join, and linear interpolation ``lo + frac·(hi−lo)``
-    reproduces quantile_cont bit-for-bit; (4) the 9-double edge row
+    full-data shuffle, partial aggs absorb duplicates map-side; (2) a
+    two-level prefix sum over the distinct values (running counts within
+    equal-width value buckets + a per-bucket offset frame, the blocked
+    scan event_session_concurrency runs over calendar days) gives every
+    distinct value its exact global rank interval [cum−c, cum); (3) the
+    ≤18 target ranks (floor/ceil of h=(n−1)p, exploded from the 1-row
+    total, never collected) probe that interval with a broadcast join,
+    and linear interpolation ``lo + frac·(hi−lo)`` reproduces
+    quantile_cont bit-for-bit; (4) the 9-double edge row
     broadcasts to the binning scan — a JVM higher-order filter — and the
     final count groups on ≤10 keys. Every stage is partial-aggregated or
     broadcast; at 100 TB the cost is one value-shuffle of the distinct
@@ -547,8 +547,6 @@ def stats_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.stats import group_quantiles
 
     li = load_table(spark, sf_dir, "lineitem")
-    # The domain stays lazy, not persisted: group_quantiles needs its
-    # range exchange reused across branches (see distributed_cumsum).
     vc = li.groupBy(
         "l_returnflag", F.col("l_extendedprice").alias("_v")
     ).agg(F.count("*").alias("_c"))
@@ -771,8 +769,8 @@ def stats_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     value — a global cumulative count, i.e. exactly the two-level
     prefix sum (distributed_cumsum, both samples' counters carried in
     one pass). No sort-to-one-reducer: the shuffle is the distinct
-    value domain, the offset frame is 32 rows. The max-deviation
-    aggregate and the α=0.05 decision (critical value
+    value domain, the offset frame has one row per value bucket. The
+    max-deviation aggregate and the α=0.05 decision (critical value
     1.358·√((n₁+n₂)/(n₁n₂))) are scalar arithmetic on integer-derived
     doubles — bit-identical cross-engine."""
     from ..operators.stats import distributed_cumsum

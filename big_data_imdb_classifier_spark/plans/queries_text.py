@@ -1246,14 +1246,14 @@ def pack_sequences_contiguous(spark: SparkSession, sf_dir: str) -> DataFrame:
     handful in any real corpus) — at 100 TB that is 20 reducers each
     sorting terabytes, the exact single-partition-window shape §2.5
     warns about, and the one this engine's ``distributed_cumsum``
-    exists to remove: range-partition by (source, doc_id) — balanced at
-    any scale — per-partition running sums, constant-size per-(source,
-    partition) offsets folded back via a broadcast join. That shape
-    costs ~3 extra small stages (+0.5 s constant locally, measured
-    same-window), which dominates while a source's (doc_id, n_tokens)
-    slice fits one reducer comfortably — so, like the Jaccard index's
-    dfreq join and SIM.ivf_params, the plan is chosen from the corpus
-    row count (parquet-footer metadata read, no job): the window below
+    exists to remove: equal-width doc_id buckets per source, one hash
+    shuffle on (source, bucket), per-bucket running sums, constant-size
+    per-(source, bucket) offsets folded back via a broadcast join. That
+    shape costs extra small stages and jobs, which dominate while a
+    source's (doc_id, n_tokens) slice fits one reducer comfortably — so,
+    like the Jaccard index's dfreq join and SIM.ivf_params, the plan is
+    chosen from the corpus row count (parquet-footer metadata read, no
+    job): the window below
     ``_PACK_CUMSUM_MIN_DOCS``, the cumsum above — and on an unprobeable
     corpus the SCALE-SAFE cumsum (unlike the similarity switches, where
     the fallback keeps the exact plan, here the small-corpus plan is

@@ -20,15 +20,6 @@ from pyspark.sql import SparkSession
 _DEFAULTS = {
     # Correctness: DuckDB oracle timestamps are UTC-naive.
     "spark.sql.session.timeZone": "UTC",
-    # Single-JVM local mode: driver heap IS the executor heap, shared by
-    # all local[N] task threads. The default 1g cannot hold a 300-tree
-    # depth-15 RF model (reference-parity hyperparams; the reference
-    # itself runs 8g, classifier_pipeline.py:91), and tree-ensemble task
-    # binaries deserialize PER TASK — peak heap scales with concurrent
-    # tasks, so 32-way local parallelism needs headroom beyond the
-    # reference's 8g. Applies only at JVM launch — getOrCreate on a live
-    # session ignores it.
-    "spark.driver.memory": "16g",
     # Runtime re-planning: partition coalescing, SMJ->BHJ conversion,
     # skew-join splitting. Free wins at any scale.
     "spark.sql.adaptive.enabled": "true",
@@ -54,6 +45,41 @@ _DEFAULTS = {
 FILE_STREAM_SINK_LOGGER = "org.apache.spark.sql.execution.streaming.sinks.FileStreamSink"
 
 
+def driver_memory() -> str:
+    """``spark.driver.memory`` for this host: half of physical memory in
+    whole GiB, capped at 16g, at least 1g.
+
+    Single-JVM local mode: the driver heap IS the executor heap, shared
+    by all local[N] task threads. The default 1g cannot hold a 300-tree
+    depth-15 RF model (reference-parity hyperparams; the reference
+    itself runs 8g, classifier_pipeline.py:91), and tree-ensemble task
+    binaries deserialize PER TASK, so peak heap scales with concurrent
+    tasks and 32-way local parallelism needs headroom beyond the
+    reference's 8g. A fixed 16g on a 15 GB host lets one JVM take the
+    whole machine, so the cap follows physical memory. Applies only at
+    JVM launch: getOrCreate on a live session ignores it.
+    """
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, min(16, phys // 2**30 // 2))}g"
+
+
+def session_conf(
+    shuffle_partitions: int | None = None,
+    extra_conf: dict[str, str] | None = None,
+) -> dict[str, str]:
+    """The conf ``get_spark`` builds with: the profile defaults, the
+    host's driver heap and shuffle partitions, then ``extra_conf``,
+    which wins over all of them."""
+    n_shuffle = str(shuffle_partitions or default_parallelism())
+    return {
+        **_DEFAULTS,
+        "spark.driver.memory": driver_memory(),
+        "spark.sql.shuffle.partitions": n_shuffle,
+        "spark.default.parallelism": n_shuffle,
+        **(extra_conf or {}),
+    }
+
+
 def default_parallelism() -> int:
     """Shuffle-partition count: env override, else CPU count."""
     env = os.environ.get("SPARK_GRAFT_CPUS")
@@ -77,16 +103,9 @@ def get_spark(
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
         master = f"local[{cpus}]" if cpus else "local[*]"
-    n_shuffle = shuffle_partitions or default_parallelism()
-
     builder = SparkSession.builder.appName(app_name).master(master)
-    for k, v in _DEFAULTS.items():
+    for k, v in session_conf(shuffle_partitions, extra_conf).items():
         builder = builder.config(k, v)
-    builder = builder.config("spark.sql.shuffle.partitions", str(n_shuffle))
-    builder = builder.config("spark.default.parallelism", str(n_shuffle))
-    if extra_conf:
-        for k, v in extra_conf.items():
-            builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     # A glob read first looks for a streaming sink's metadata directory at

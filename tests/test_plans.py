@@ -626,3 +626,25 @@ def test_partitioned_layout_reads_only_matching_days(spark):
     assert len(files) == len(_PRUNE_DAYS), files
     for f in files:
         assert any(f"day={d}" in f for d in _PRUNE_DAYS), f
+
+
+def test_no_partition_id_and_range_partitioning_only_in_layout_writers():
+    """No result in the package may depend on which physical partition a
+    row landed in: ``spark_partition_id`` appears nowhere, and
+    ``repartitionByRange`` is called only by the file-layout writers,
+    where partition order decides file contents, not answers."""
+    import pathlib
+
+    import big_data_imdb_classifier_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    pid, ranged = [], []
+    for path in sorted(root.rglob("*.py")):
+        src = path.read_text()
+        rel = path.relative_to(root).as_posix()
+        if re.search(r"spark_partition_id", src, re.IGNORECASE):
+            pid.append(rel)
+        if re.search(r"\.repartitionByRange\(", src):
+            ranged.append(rel)
+    assert pid == []
+    assert ranged == ["operators/layout.py", "sources/sinks.py"]

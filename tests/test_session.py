@@ -48,3 +48,24 @@ def test_cluster_conf_runs_on_local_cluster_master():
     )
     assert proc.returncode == 0, proc.stdout[-2000:] + proc.stderr[-2000:]
     assert "OK cluster-smoke" in proc.stdout
+
+
+def test_driver_heap_follows_host_memory(monkeypatch):
+    """spark.driver.memory is half of physical memory in whole GiB,
+    capped at 16g and at least 1g, read with os.sysconf; an explicit
+    extra_conf still wins."""
+    import os
+
+    from big_data_imdb_classifier_spark import session
+
+    page = 4096
+    for gib, want in [(15.5, "7g"), (8, "4g"), (31, "15g"), (64, "16g"), (1, "1g")]:
+        pages = int(gib * 2**30) // page
+        monkeypatch.setattr(
+            os, "sysconf",
+            lambda n, pages=pages: {"SC_PAGE_SIZE": page, "SC_PHYS_PAGES": pages}[n],
+        )
+        assert session.driver_memory() == want, gib
+        assert session.session_conf()["spark.driver.memory"] == want, gib
+    conf = session.session_conf(extra_conf={"spark.driver.memory": "3g"})
+    assert conf["spark.driver.memory"] == "3g"

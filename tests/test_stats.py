@@ -5,6 +5,8 @@ aggregate on the same data."""
 
 from __future__ import annotations
 
+import math
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -120,6 +122,34 @@ def test_group_quantiles_matches_builtin_percentile(spark):
         F.percentile("v", F.array(*[F.lit(p) for p in pcts])).alias("p")
     ).collect()[0]["p"]
     assert got_g == want_g
+
+
+def test_group_quantiles_persisted_input_matches_builtin(spark):
+    """Over a persist()-ed lineitem the per-flag medians still equal
+    F.percentile: the scan's blocks are a function of the data, so the
+    branches that re-read the cached input agree on every row's block.
+    (To 1 ulp, as in the property test below.)"""
+    from big_data_imdb_classifier_spark.operators.stats import group_quantiles
+
+    li = load_table(spark, SF_SMOKE, "lineitem").persist()
+    try:
+        got = {
+            r["l_returnflag"]: r["q"][0]
+            for r in group_quantiles(
+                li, ["l_returnflag"], "l_extendedprice", [0.5]
+            ).collect()
+        }
+        want = {
+            r["l_returnflag"]: r["p"]
+            for r in li.groupBy("l_returnflag")
+            .agg(F.percentile("l_extendedprice", F.lit(0.5)).alias("p"))
+            .collect()
+        }
+    finally:
+        li.unpersist()
+    assert set(got) == set(want)
+    for flag, p in want.items():
+        assert got[flag] == pytest.approx(p, rel=1e-12), (flag, got[flag], p)
 
 
 def test_group_quantiles_rank_side_and_single_tail_aggregation(spark):
@@ -308,73 +338,186 @@ def test_autocorrelation_is_bounded_and_pairs_shrink(spark):
     assert pairs == sorted(pairs, reverse=True)
 
 
+def _scan_variants(spark, df):
+    """(label, frame) pairs under which a prefix-scan primitive must give
+    one answer: the lazy frame, the frame persisted, and the lazy frame
+    under 1 and 7 shuffle partitions. The caller builds and collects its
+    result inside each step, so the conf holds while it runs."""
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    yield "lazy", df
+    cached = df.persist()
+    yield "persisted", cached
+    cached.unpersist()
+    try:
+        for n in (1, 7):
+            spark.conf.set("spark.sql.shuffle.partitions", str(n))
+            yield f"{n} shuffle partitions", df
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+def _spark_asc(x):
+    """Python sort key for Spark's ascending order of a double:
+    NULL first, NaN last."""
+    if x is None:
+        return (0, 0.0)
+    if math.isnan(x):
+        return (2, 0.0)
+    return (1, x)
+
+
 def test_distributed_cumsum_matches_window(spark):
     """distributed_cumsum == a plain single-partition window cumsum, on
-    signed multi-measure data (the partition totals must come from the
-    raw measure, not the running max) — global and keyed forms."""
+    signed multi-measure data (the bucket totals must come from the
+    raw measure, not the running max) — global and keyed forms. Each
+    input also runs persisted and under 1 and 7 shuffle partitions;
+    the double-ordered input carries NULL, NaN and ±Infinity order
+    values, and one key whose finite order values are constant (zero
+    bucket width)."""
     from pyspark.sql.window import Window
 
     from big_data_imdb_classifier_spark.operators.stats import (
         distributed_cumsum,
     )
 
+    inf = float("inf")
     rows = [
         (k, i, (i * 7 + ord(k)) % 13 - 6, float((i * 3 - ord(k)) % 11 - 5))
         for k in ("a", "b")
         for i in range(200)
     ]
     df = spark.createDataFrame(rows, "k STRING, o INT, m1 INT, m2 DOUBLE")
-
-    # Keyed form.
-    got = {
-        (r["k"], r["o"]): (r["m1_cum"], r["m2_cum"])
-        for r in distributed_cumsum(df, ["k"], "o", ["m1", "m2"]).collect()
-    }
+    special = [None, float("nan"), inf, -inf]
+    drows = [
+        (k, o, (i * 5) % 9 - 4, float(i % 7 - 3))
+        for k, os_ in (
+            ("a", [i * 0.5 - 20.0 for i in range(120)] + special),
+            ("c", [7.0] + special),
+            ("d", [3.25]),
+        )
+        for i, o in enumerate(os_)
+    ]
+    ddf = spark.createDataFrame(drows, "k STRING, o DOUBLE, m1 INT, m2 DOUBLE")
     w = Window.partitionBy("k").orderBy("o").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
-    want = {
-        (r["k"], r["o"]): (r["c1"], r["c2"])
-        for r in df.select(
-            "k",
-            "o",
-            F.sum("m1").over(w).alias("c1"),
-            F.sum("m2").over(w).alias("c2"),
-        ).collect()
-    }
-    assert got == want
 
-    # Global form (keys=[]): dummy key added and dropped.
+    def key(r):  # NaN != NaN: compare order values through their sort key
+        return (r["k"], _spark_asc(r["o"]))
+
+    for frame in (df, ddf):
+        want = {
+            key(r): (r["c1"], r["c2"])
+            for r in frame.select(
+                "k",
+                "o",
+                F.sum("m1").over(w).alias("c1"),
+                F.sum("m2").over(w).alias("c2"),
+            ).collect()
+        }
+        for label, x in _scan_variants(spark, frame):
+            got = {
+                key(r): (r["m1_cum"], r["m2_cum"])
+                for r in distributed_cumsum(x, ["k"], "o", ["m1", "m2"]).collect()
+            }
+            assert got == want, label
+
+    # Global form (keys=[]): no key column added or kept.
     gdf = df.where(F.col("k") == "a").select("o", "m1")
-    gout = distributed_cumsum(gdf, [], "o", ["m1"])
-    assert set(gout.columns) == {"o", "m1", "m1_cum"}
-    got_g = {r["o"]: r["m1_cum"] for r in gout.collect()}
     acc, want_g = 0, {}
     for i in range(200):
         acc += (i * 7 + ord("a")) % 13 - 6
         want_g[i] = acc
-    assert got_g == want_g
+    for label, x in _scan_variants(spark, gdf):
+        gout = distributed_cumsum(x, [], "o", ["m1"])
+        assert set(gout.columns) == {"o", "m1", "m1_cum"}
+        assert {r["o"]: r["m1_cum"] for r in gout.collect()} == want_g, label
+
+    with pytest.raises(ValueError, match=r"'k'.*string"):
+        distributed_cumsum(df, [], "k", ["m1"])
+
+
+def test_distributed_cumsum_one_domain_exchange(spark):
+    """The prefix scans shuffle their rows once: one hash exchange on
+    (keys, bucket) under the running window; every other exchange in
+    the plan carries partial aggregates (bounds, bucket totals) or
+    the small offset frame. No range partitioning anywhere."""
+    import re
+
+    from big_data_imdb_classifier_spark.operators.stats import (
+        distributed_cumsum,
+        rank_value_lookup,
+    )
+
+    df = spark.range(1000).selectExpr(
+        "id % 3 AS k", "id AS o", "id % 5 AS m"
+    )
+    markers = spark.range(50).selectExpr("id * 7 AS pos", "cast(id AS double) AS v")
+    probes = spark.range(300).selectExpr("id AS pid", "id AS pos")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        for out in (
+            distributed_cumsum(df, ["k"], "o", ["m"]),
+            distributed_cumsum(df, [], "o", ["m"]),
+            rank_value_lookup(markers, probes),
+        ):
+            plan = out._jdf.queryExecution().executedPlan().toString()
+            lines = plan.splitlines()
+            domain = [
+                line
+                for line, child in zip(lines, lines[1:])
+                if re.search(r"\bExchange ", line)
+                and "HashAggregate" not in child
+                and "SinglePartition" not in line
+            ]
+            assert len(domain) == 1, plan
+            assert "_b#" in domain[0], plan
+            assert "rangepartitioning" not in plan, plan
+    finally:
+        spark.conf.unset("spark.sql.adaptive.enabled")
 
 
 def test_rank_value_lookup_matches_linear_scan(spark):
     """rank_value_lookup == 'largest marker pos <= probe pos' by brute
-    force, including probes before any in-partition marker (offset-frame
-    carry), equal-position ties (marker wins), and sparse markers."""
+    force, including probes before any in-bucket marker (offset-frame
+    carry), equal-position ties (marker wins), and sparse markers. Each
+    input also runs persisted and under 1 and 7 shuffle partitions; the
+    double-positioned input carries NULL, NaN and ±Infinity positions in
+    Spark's sort order, and the constant one has every position equal
+    (zero bucket width)."""
     from big_data_imdb_classifier_spark.operators.stats import (
         rank_value_lookup,
     )
 
-    marker_rows = [(p, float(p * 10)) for p in [0, 3, 4, 9, 17, 40, 41, 99]]
-    probe_rows = [(i, (i * 13) % 120) for i in range(80)]
-    markers = spark.createDataFrame(marker_rows, "pos LONG, v DOUBLE")
-    probes = spark.createDataFrame(probe_rows, "pid LONG, pos LONG")
-
-    got = {
-        r["pid"]: r["v_at"]
-        for r in rank_value_lookup(markers, probes).collect()
-    }
-    want = {}
-    for pid, pos in probe_rows:
-        best = [mv for mp, mv in marker_rows if mp <= pos]
-        want[pid] = best[-1] if best else None
-    assert got == want
+    inf, nan = float("inf"), float("nan")
+    cases = [
+        (
+            "pos LONG",
+            [(p, float(p * 10)) for p in [0, 3, 4, 9, 17, 40, 41, 99]],
+            [(i, (i * 13) % 120) for i in range(80)],
+        ),
+        (
+            "pos DOUBLE",
+            [(p, float(i)) for i, p in enumerate([-inf, 0.0, 3.5, 9.0, 40.0, inf])],
+            [(i, (i * 13) % 120 / 2.0 - 10.0) for i in range(60)]
+            + [(60, None), (61, nan), (62, inf), (63, -inf)],
+        ),
+        ("pos LONG", [(7, 1.0)], [(i, 7) for i in range(20)]),
+    ]
+    for ptype, marker_rows, probe_rows in cases:
+        markers = spark.createDataFrame(marker_rows, f"{ptype}, v DOUBLE")
+        probes = spark.createDataFrame(probe_rows, f"pid LONG, {ptype}")
+        want = {}
+        for pid, pos in probe_rows:
+            best = [
+                mv
+                for mp, mv in sorted(marker_rows, key=lambda m: _spark_asc(m[0]))
+                if _spark_asc(mp) <= _spark_asc(pos)
+            ]
+            want[pid] = best[-1] if best else None
+        for label, x in _scan_variants(spark, probes):
+            got = {
+                r["pid"]: r["v_at"]
+                for r in rank_value_lookup(markers, x).collect()
+            }
+            assert got == want, (ptype, label)

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import re
+
 from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -727,9 +729,10 @@ def test_pack_sequences_cumsum_path_equals_window_path(spark, monkeypatch):
     monkeypatch.setattr(QT, "_PACK_CUMSUM_MIN_DOCS", 0)
     cum = QT.pack_sequences_contiguous(spark, SF_ORACLE).collect()
     assert [tuple(r) for r in win] == [tuple(r) for r in cum]
-    # and the forced plan really is the cumsum shape: the range
-    # repartition's _pid machinery joins offsets back broadcast-side
-    plan = QT.pack_sequences_contiguous(
-        spark, SF_ORACLE
-    )._jdf.queryExecution().optimizedPlan().toString()
-    assert "SPARK_PARTITION_ID" in plan.upper() or "_pid" in plan
+    # and the forced plan really is the cumsum shape — a window over
+    # (source, bucket) — with no range partitioning on doc_id (the final
+    # orderBy still range-partitions its small output)
+    qe = QT.pack_sequences_contiguous(spark, SF_ORACLE)._jdf.queryExecution()
+    assert "_b#" in qe.optimizedPlan().toString()
+    physical = qe.executedPlan().toString()
+    assert not re.search(r"rangepartitioning\([^)]*doc_id", physical), physical
