@@ -83,45 +83,56 @@ def knn_exact_cosine(
     )
 
 
-# ---------------------------------------------------------------------------
-# Exact-vs-ANN auto-switch (round 7, VERDICT r6 task 4). The brute-force
-# gates (hard-negative mining, MaxSim, Matryoshka recall) are correct
-# and oracle-pinned at demo scale, but a broadcast O(Q×N) scan is the
-# wrong plan on a real corpus. The switch makes the IVF shortlist the
-# IN-CODE scale path instead of a docstring promise: below the
-# threshold the queries keep their exact plans (and their hash
-# oracles — every driver SF is far below it); at/above it the candidate
-# enumeration swaps to the cell-probe shortlist and the query's own
-# scoring becomes the exact re-rank stage. tests/test_similarity.py
-# proves the fired switch changes the plan shape (no
-# BroadcastNestedLoopJoin, Arrow cell assignment present) and holds a
-# recall floor against the exact result.
-# ---------------------------------------------------------------------------
-
-ANN_SWITCH_MIN_CORPUS = 100_000
+def _rerank_cosine(
+    cand: DataFrame,
+    vectors: DataFrame,
+    queries: DataFrame,
+    k: int,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """Exact cosine top-k over a (query_id, neighbor_id) shortlist — the
+    re-rank stage of every approximate search here. Same output and
+    tiebreak as knn_exact_cosine, but the corpus join touches only
+    shortlisted rows."""
+    q = queries.select(F.col(id_col).alias("query_id"), as_double(vec_col).alias("_qe"))
+    c = vectors.select(F.col(id_col).alias("neighbor_id"), as_double(vec_col).alias("_ce"))
+    sims = (
+        cand.join(F.broadcast(q), "query_id")
+        .join(c, "neighbor_id")
+        .select(
+            "query_id",
+            "neighbor_id",
+            cosine_col(F.col("_qe"), F.col("_ce")).alias("_sim"),
+        )
+    )
+    w = Window.partitionBy("query_id").orderBy(F.desc("_sim"), F.asc("neighbor_id"))
+    return (
+        sims.withColumn("rank", F.row_number().over(w).cast("long"))
+        .where(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "rank", F.col("_sim").alias("sim"))
+    )
 
 
 def corpus_row_count(sf_dir: str, table: str = "embeddings") -> int:
     """Corpus size from parquet FOOTERS (driver-side metadata read, no
-    Spark job) — the switch predicate must not cost a cluster action on
-    the small-corpus path it exists to keep cheap. The table may be a
-    single file OR a Spark-written directory of part files (any corpus
-    the engine itself materialized, e.g. the scale rehearsal's 10×
-    embeddings) — ``sources.footer.footer_row_count`` sums ``num_rows``
-    across part footers in that case.
+    Spark job): the IVF/SemDeDup index sizing (``ivf_params``), the
+    strided-sample stride and the text-packing plan choice read it at
+    query construction, where a ``count()`` would cost a cluster action.
+    The table may be a single file OR a Spark-written directory of part
+    files (any corpus the engine itself materialized, e.g. the scale
+    rehearsal's 10× embeddings) — ``sources.footer.footer_row_count``
+    sums ``num_rows`` across part footers in that case.
 
     A ``synthetic://`` sf_dir (the storage-free scale-rehearsal
     DataSources) carries its row counts IN THE URI — parse them instead
     of probing the filesystem, where ``os.path.join`` on the URI can
-    never resolve (round-8 ADVICE: the fallthrough silently disabled
-    the ANN/SemDeDup switch for exactly the largest rehearsal corpora
-    the scale path is built for).
+    never resolve.
 
     A failed filesystem probe (missing path, non-parquet payload)
-    returns 0 so callers keep their exact plan instead of crashing the
-    query on a predicate that exists purely to pick a faster plan — but
-    the swallowed exception is logged so a genuinely broken probe
-    (permissions, corrupt footer) is visible, not misread as
+    returns 0, and callers fall back to ``count()`` or their scale-safe
+    plan — but the swallowed exception is logged so a genuinely broken
+    probe (permissions, corrupt footer) is visible, not misread as
     'small corpus'."""
     import logging
     import os
@@ -148,7 +159,7 @@ def corpus_row_count(sf_dir: str, table: str = "embeddings") -> int:
     except ValueError as exc:  # missing path / not parquet
         logging.getLogger(__name__).warning(
             "corpus_row_count: footer probe of %s failed (%r) — "
-            "returning 0, callers keep the exact plan",
+            "returning 0",
             path,
             exc,
         )
@@ -163,11 +174,10 @@ def ivf_candidate_pairs(
     vec_col: str = "embedding",
     sample: "np.ndarray | None" = None,
 ) -> DataFrame:
-    """(query_id, neighbor_id) IVF cell-probe shortlist — the candidate
-    enumeration stage shared by the auto-switched gates; the caller
-    applies its own scoring (plain cosine, truncated-prefix cosine,
-    MaxSim) as the exact re-rank over these pairs. Index parameters
-    scale with the corpus (√N cells, 40% probe — ivf_params), so the
+    """(query_id, neighbor_id) IVF cell-probe shortlist built once and
+    passed as ``cand`` to both ``knn_ivf`` and ``knn_ivf_pq`` (the
+    recall gate), which re-rank these pairs. Index parameters scale
+    with the corpus (√N cells, 40% probe — ivf_params), so the
     per-query candidate pool is ~n_probe/n_clusters of the corpus
     instead of all of it. ``sample``: see knn_ivf — skips this build's
     sampling scan when the caller already collected the identical
@@ -178,6 +188,19 @@ def ivf_candidate_pairs(
             vectors, id_col, vec_col, n_rows=n_corpus
         )
     centers = lloyd_centers_deterministic(sample, n_clusters)
+    return _cell_probe_pairs(vectors, queries, centers, n_probe, id_col, vec_col)
+
+
+def _cell_probe_pairs(
+    vectors: DataFrame,
+    queries: DataFrame,
+    centers: np.ndarray,
+    n_probe: int,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """Distinct (query_id, neighbor_id) pairs whose corpus row falls in
+    one of the query's ``n_probe`` nearest cells of ``centers``."""
     corpus_cells = vectors.select(
         F.col(id_col).alias("neighbor_id"),
         assign_cells_col(centers, vec_col).alias("cell"),
@@ -191,42 +214,6 @@ def ivf_candidate_pairs(
         .where(F.col("query_id") != F.col("neighbor_id"))
         .select("query_id", "neighbor_id")
         .distinct()
-    )
-
-
-def topk_cosine_over_pairs(
-    cand: DataFrame,
-    vectors: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Exact cosine re-rank of a candidate-pair shortlist — same output
-    contract as knn_exact_cosine (query_id, neighbor_id, rank, sim),
-    but the corpus join touches only shortlisted rows."""
-    q = queries.select(
-        F.col(id_col).alias("query_id"), as_double(vec_col).alias("_qe")
-    )
-    c = vectors.select(
-        F.col(id_col).alias("neighbor_id"), as_double(vec_col).alias("_ce")
-    )
-    sims = (
-        cand.join(F.broadcast(q), "query_id")
-        .join(c, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine_col(F.col("_qe"), F.col("_ce")).alias("_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("_sim"), F.asc("neighbor_id")
-    )
-    return (
-        sims.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.col("_sim").alias("sim"))
     )
 
 
@@ -299,23 +286,7 @@ def knn_ann_hyperplane(
         .select("query_id", F.col(id_col).alias("neighbor_id"))
         .distinct()
     )
-    q = queries.select(F.col(id_col).alias("query_id"), as_double(vec_col).alias("_qe"))
-    c = vectors.select(F.col(id_col).alias("neighbor_id"), as_double(vec_col).alias("_ce"))
-    sims = (
-        cand.join(F.broadcast(q), "query_id")
-        .join(c, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine_col(F.col("_qe"), F.col("_ce")).alias("_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("_sim"), F.asc("neighbor_id"))
-    return (
-        sims.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.col("_sim").alias("sim"))
-    )
+    return _rerank_cosine(cand, vectors, queries, k, id_col, vec_col)
 
 
 def ivf_params(n_vectors: int) -> tuple[int, int, int]:
@@ -511,40 +482,10 @@ def knn_ivf(
                 vectors, id_col, vec_col, n_rows=n_rows
             )
         centers = lloyd_centers_deterministic(sample, n_clusters)
-
-        corpus_cells = vectors.select(
-            F.col(id_col).alias("neighbor_id"),
-            assign_cells_col(centers, vec_col).alias("cell"),
+        cand = _cell_probe_pairs(
+            vectors, queries, centers, n_probe, id_col, vec_col
         )
-
-        q_cells = queries.select(
-            F.col(id_col).alias("query_id"),
-            F.explode(probe_cells_col(centers, n_probe, vec_col)).alias("cell"),
-        )
-
-        cand = (
-            q_cells.join(corpus_cells, "cell")
-            .where(F.col("query_id") != F.col("neighbor_id"))
-            .select("query_id", "neighbor_id")
-            .distinct()
-        )
-    q = queries.select(F.col(id_col).alias("query_id"), as_double(vec_col).alias("_qe"))
-    c = vectors.select(F.col(id_col).alias("neighbor_id"), as_double(vec_col).alias("_ce"))
-    sims = (
-        cand.join(F.broadcast(q), "query_id")
-        .join(c, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine_col(F.col("_qe"), F.col("_ce")).alias("_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("_sim"), F.asc("neighbor_id"))
-    return (
-        sims.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.col("_sim").alias("sim"))
-    )
+    return _rerank_cosine(cand, vectors, queries, k, id_col, vec_col)
 
 
 def semantic_dedup_cell_pairs(
@@ -821,19 +762,8 @@ def knn_ivf_pq(
     )
     if cand is None:
         centers = lloyd_centers_deterministic(sample, n_clusters)
-        corpus_cells = vectors.select(
-            F.col(id_col).alias("neighbor_id"),
-            assign_cells_col(centers, vec_col).alias("cell"),
-        )
-        q_cells = queries.select(
-            F.col(id_col).alias("query_id"),
-            F.explode(probe_cells_col(centers, n_probe, vec_col)).alias("cell"),
-        )
-        cand = (
-            q_cells.join(corpus_cells, "cell")
-            .where(F.col("query_id") != F.col("neighbor_id"))
-            .select("query_id", "neighbor_id")
-            .distinct()
+        cand = _cell_probe_pairs(
+            vectors, queries, centers, n_probe, id_col, vec_col
         )
     cand = cand.join(codes, "neighbor_id")
 
@@ -890,21 +820,4 @@ def knn_ivf_pq(
     )
 
     # --- stage 2: exact re-rank of the bounded shortlist ---
-    c = vectors.select(
-        F.col(id_col).alias("neighbor_id"), as_double(vec_col).alias("_ce")
-    )
-    sims = (
-        shortlist.join(F.broadcast(q), "query_id")
-        .join(c, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine_col(F.col("_qe"), F.col("_ce")).alias("_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("_sim"), F.asc("neighbor_id"))
-    return (
-        sims.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.col("_sim").alias("sim"))
-    )
+    return _rerank_cosine(shortlist, vectors, queries, k, id_col, vec_col)

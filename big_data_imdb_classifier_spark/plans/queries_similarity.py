@@ -205,11 +205,6 @@ _COS_DUP_THRESHOLD = 0.45
 
 @query(
     "dedup_embedding_cosine",
-    # The oracle replays the EXACT (below-switch) plan; at/above the
-    # ANN/SemDeDup switch the Spark side returns the candidate-
-    # enumeration subset and a hash compare fails BY DESIGN — sweep
-    # tools downgrade to rows-only there (round-8 ADVICE).
-    oracle_valid_below=("embeddings", SIM.ANN_SWITCH_MIN_CORPUS),
     oracle=f"""
     WITH e AS (
       SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
@@ -231,28 +226,11 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/similarity.cosine_pairs_blocked): vectors L2-normalized
     once, then every block pair is a single numpy GEMM instead of three
     expression-tree aggregates per pair (measured 157 s → ~2 s at
-    sf0.1). This is the correctness oracle for semantic dedup; at 100 TB
-    the same verify step runs over bucketed candidates only instead of
-    the quadratic block cross-join.
-
-    That scale path is IN CODE, not a docstring promise (round-7
-    verdict task 8, mirroring the three ANN-switched gates): at/above
-    ``ANN_SWITCH_MIN_CORPUS`` the block cross-join yields to the
-    cluster-local SemDeDup candidate enumeration
-    (``semantic_dedup_cell_pairs``, √N soft cells → O(N^1.5) candidate
-    volume) whose verify stage is the same exact-cosine vectorized
-    check. Below the threshold — every driver SF — the exact all-pairs
-    plan and its hash oracle are untouched."""
+    sf0.1). This is the correctness baseline for semantic dedup at every
+    corpus size: the approximate, cluster-local candidate enumeration is
+    its own query, ``dedup_embedding_semdedup``, with its own oracle."""
     emb = load_table(spark, sf_dir, "embeddings")
-    n = SIM.corpus_row_count(sf_dir)
-    if n >= SIM.ANN_SWITCH_MIN_CORPUS:
-        n_clusters, _, _ = SIM.ivf_params(n)
-        pairs = SIM.semantic_dedup_cell_pairs(
-            emb, threshold=_COS_DUP_THRESHOLD, n_clusters=n_clusters,
-            n_rows=n,
-        )
-    else:
-        pairs = SIM.cosine_pairs_blocked(emb, threshold=_COS_DUP_THRESHOLD)
+    pairs = SIM.cosine_pairs_blocked(emb, threshold=_COS_DUP_THRESHOLD)
     return pairs.select(
         "vec_a", "vec_b", F.round("sim", ROUND_DIGITS).alias("sim")
     ).orderBy("vec_a", "vec_b")
@@ -824,11 +802,6 @@ _MS_TOPK = 10
 
 @query(
     "sim_maxsim_multivector",
-    # The oracle replays the EXACT (below-switch) plan; at/above the
-    # ANN/SemDeDup switch the Spark side returns the candidate-
-    # enumeration subset and a hash compare fails BY DESIGN — sweep
-    # tools downgrade to rows-only there (round-8 ADVICE).
-    oracle_valid_below=("embeddings", SIM.ANN_SWITCH_MIN_CORPUS),
     oracle=f"""
     WITH q AS (
       SELECT vec_id AS query_id, embedding::DOUBLE[] AS qe
@@ -884,11 +857,9 @@ def sim_maxsim_multivector(spark: SparkSession, sf_dir: str) -> DataFrame:
     higher-order functions (transform over document sub-slices, max,
     fold over query sub-slices), no explode, so the corpus scan stays
     one row per document and the only shuffle is the per-query top-k
-    ranking. At corpus scale (>= SIM.ANN_SWITCH_MIN_CORPUS) the IN-CODE
-    switch shortlists candidates through the IVF cell probe on the
-    full-width vector and MaxSim becomes the exact re-rank stage —
-    precisely how late-interaction systems deploy (shortlist on a
-    pooled/single-vector index, late interaction on the shortlist)."""
+    ranking. The scan is linear in the corpus at every size; a
+    shortlist-then-rerank variant would be a separate query with its
+    own oracle."""
     emb = load_table(spark, sf_dir, "embeddings")
 
     def dot(a, b):
@@ -914,16 +885,9 @@ def sim_maxsim_multivector(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("neighbor_id"),
         subvecs(SIM.as_double("embedding")).alias("dsub"),
     )
-    if SIM.corpus_row_count(sf_dir) >= SIM.ANN_SWITCH_MIN_CORPUS:
-        cand = SIM.ivf_candidate_pairs(
-            emb, emb.where(F.col("vec_id") < N_QUERY_VECS),
-            SIM.corpus_row_count(sf_dir),
-        )
-        pair = cand.join(F.broadcast(q), "query_id").join(c, "neighbor_id")
-    else:
-        pair = c.crossJoin(F.broadcast(q)).where(
-            F.col("query_id") != F.col("neighbor_id")
-        )
+    pair = c.crossJoin(F.broadcast(q)).where(
+        F.col("query_id") != F.col("neighbor_id")
+    )
     score = F.aggregate(
         F.col("qsub"),
         F.lit(0.0),
@@ -989,11 +953,6 @@ _MRL_TRUNC_SQL = "\n      UNION ALL\n".join(
 
 @query(
     "knn_matryoshka_dim_recall",
-    # The oracle replays the EXACT (below-switch) plan; at/above the
-    # ANN/SemDeDup switch the Spark side returns the candidate-
-    # enumeration subset and a hash compare fails BY DESIGN — sweep
-    # tools downgrade to rows-only there (round-8 ADVICE).
-    oracle_valid_below=("embeddings", SIM.ANN_SWITCH_MIN_CORPUS),
     oracle=f"""
     WITH q AS (
       SELECT vec_id AS query_id, embedding::DOUBLE[] AS qe
@@ -1033,23 +992,9 @@ def knn_matryoshka_dim_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     Both engines accumulate dot products left-to-right, so ranks (and
     the hash) are exact matches, not approximate ones."""
     emb = load_table(spark, sf_dir, "embeddings")
-    # In-code scale switch (round 7): above the corpus threshold every
-    # width — full and truncated — re-ranks the SAME full-width IVF
-    # shortlist instead of broadcast-scanning the corpus per width
-    # (shortlist-relative recall, the deployed Matryoshka shape: the
-    # prefix index serves candidates, full width re-ranks). Below it
-    # (every driver SF) the exact plans and their oracle stand.
-    cand = None
-    if SIM.corpus_row_count(sf_dir) >= SIM.ANN_SWITCH_MIN_CORPUS:
-        cand = SIM.ivf_candidate_pairs(
-            emb, emb.where(F.col("vec_id") < N_QUERY_VECS),
-            SIM.corpus_row_count(sf_dir),
-        )
 
     def _topk(vectors):
         queries = vectors.where(F.col("vec_id") < N_QUERY_VECS)
-        if cand is not None:
-            return SIM.topk_cosine_over_pairs(cand, vectors, queries, k=TOP_K)
         return SIM.knn_exact_cosine(vectors, queries, k=TOP_K)
 
     full = (
@@ -1099,11 +1044,6 @@ _HN_K = 5
 
 @query(
     "knn_hard_negative_mining",
-    # The oracle replays the EXACT (below-switch) plan; at/above the
-    # ANN/SemDeDup switch the Spark side returns the candidate-
-    # enumeration subset and a hash compare fails BY DESIGN — sweep
-    # tools downgrade to rows-only there (round-8 ADVICE).
-    oracle_valid_below=("embeddings", SIM.ANN_SWITCH_MIN_CORPUS),
     oracle=f"""
     WITH q AS (
       SELECT vec_id AS query_id, embedding::DOUBLE[] AS qe, label AS ql
@@ -1141,14 +1081,8 @@ def knn_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: identical to knn_exact_cosine (broadcast query side,
     one corpus pass, one ranking shuffle) with the label-mismatch
     predicate evaluated as a join residual BEFORE any similarity math,
-    so same-label candidates never reach the dot product. At corpus
-    scale (>= SIM.ANN_SWITCH_MIN_CORPUS rows, footer-metadata check, no
-    job) the IN-CODE switch replaces the exact pass with the IVF
-    cell-probe shortlist and this scoring becomes its re-rank filter —
-    tests/test_similarity.py proves the fired switch drops the
-    BroadcastNestedLoopJoin from the plan and holds a recall floor vs
-    the exact result; every driver SF stays far below the threshold, so
-    the oracle pins the exact path."""
+    so same-label candidates never reach the dot product. The pass is
+    linear in the corpus at every size, and the oracle pins it."""
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.where(F.col("vec_id") < N_QUERY_VECS).select(
         F.col("vec_id").alias("query_id"),
@@ -1162,23 +1096,11 @@ def knn_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from pyspark.sql.window import Window
 
-    if SIM.corpus_row_count(sf_dir) >= SIM.ANN_SWITCH_MIN_CORPUS:
-        cand = SIM.ivf_candidate_pairs(
-            emb, emb.where(F.col("vec_id") < N_QUERY_VECS),
-            SIM.corpus_row_count(sf_dir),
-        )
-        sims = (
-            cand.join(F.broadcast(q), "query_id")
-            .join(c, "neighbor_id")
-            .where(F.col("_ql") != F.col("neg_label"))
-        )
-    else:
-        sims = c.join(
-            F.broadcast(q),
-            (F.col("query_id") != F.col("neighbor_id"))
-            & (F.col("_ql") != F.col("neg_label")),
-        )
-    sims = sims.select(
+    sims = c.join(
+        F.broadcast(q),
+        (F.col("query_id") != F.col("neighbor_id"))
+        & (F.col("_ql") != F.col("neg_label")),
+    ).select(
         "query_id",
         "neighbor_id",
         "neg_label",

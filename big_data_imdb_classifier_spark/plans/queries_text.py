@@ -1255,9 +1255,8 @@ def pack_sequences_contiguous(spark: SparkSession, sf_dir: str) -> DataFrame:
     chosen from the corpus row count (parquet-footer metadata read, no
     job): the window below
     ``_PACK_CUMSUM_MIN_DOCS``, the cumsum above — and on an unprobeable
-    corpus the SCALE-SAFE cumsum (unlike the similarity switches, where
-    the fallback keeps the exact plan, here the small-corpus plan is
-    the unsafe one). Values are identical on both paths: n_tokens is
+    corpus the SCALE-SAFE cumsum (the small-corpus plan is the unsafe
+    one). Values are identical on both paths: n_tokens is
     integral, the running sum is exact long arithmetic in both shapes,
     and the bin_id expression on top is unchanged (re-proven against
     the oracle at all three SFs)."""

@@ -25,17 +25,6 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
 
-# Oracles valid only BELOW a corpus-size bound (round-8 ADVICE): a query
-# that auto-switches its exact plan to a candidate-enumeration scale
-# path above a row-count threshold keeps an oracle that replays the
-# BELOW-threshold plan — at/above the bound the Spark result is the
-# switched subset and the comparison would fail BY DESIGN, not by bug.
-# Maps query name -> (table probed by the switch, min rows at which the
-# switch fires). Sweep tools (tools/driver_sim.py) downgrade the check
-# to rows-only in the switched regime; the driver's own gate always
-# runs at sf0.01, far below every bound.
-ORACLE_VALID_BELOW: dict[str, tuple[str, int]] = {}
-
 ROUND_DIGITS = 4
 
 
@@ -59,19 +48,15 @@ def format_doc(fn: Callable, **params: object) -> None:
 
 
 def query(
-    name: str,
-    oracle: str | None = None,
-    oracle_valid_below: tuple[str, int] | None = None,
+    name: str, oracle: str | None = None
 ) -> Callable[[QueryFn], QueryFn]:
     """Register a named query and (optionally) its DuckDB oracle SQL.
 
     Queries without an oracle get the driver's weaker rows-only check —
     reserved for genuinely non-SQL-expressible ops (ML training, LSH
-    bucketing with library hashes, streaming state).
-
-    ``oracle_valid_below=(table, min_rows)`` marks the oracle as valid
-    only while ``table`` has fewer than ``min_rows`` rows — the regime
-    gate for plan-switching queries (see ORACLE_VALID_BELOW).
+    bucketing with library hashes, streaming state). An oracle holds at
+    every corpus size: a query has one plan, so an approximate variant
+    is registered as its own query with its own oracle.
     """
 
     def deco(fn: QueryFn) -> QueryFn:
@@ -80,8 +65,6 @@ def query(
         QUERIES[name] = fn
         if oracle is not None:
             ORACLES[name] = oracle
-        if oracle_valid_below is not None:
-            ORACLE_VALID_BELOW[name] = oracle_valid_below
         return fn
 
     return deco

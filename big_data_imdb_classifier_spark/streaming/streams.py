@@ -349,83 +349,6 @@ def stream_upsert_into_cache(
     q.awaitTermination(timeout_sec)
 
 
-# ---------------------------------------------------------------------------
-# Custom stateful operator, Spark 4 API (transformWithStateInPandas)
-# ---------------------------------------------------------------------------
-
-def tws_available() -> bool:
-    """Whether ``transformWithStateInPandas`` can run here.
-
-    The Spark 4 arbitrary-state API talks to the JVM state server over a
-    protobuf protocol, so it needs the ``protobuf`` Python package (not
-    bundled with pyspark). When absent, the applyInPandasWithState
-    operator above remains the supported custom-state path.
-    """
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def running_user_totals_tws(events: DataFrame) -> DataFrame:
-    """Per-user running (count, sum) via ``transformWithStateInPandas`` —
-    the Spark 4 successor to applyInPandasWithState: explicit typed state
-    handles (value/list/map state), timers, and TTL support instead of a
-    single state tuple.
-
-    Semantically identical to ``running_user_totals_stream`` (the test
-    diffs both against the batch groupBy); kept as the forward-looking
-    twin because the new API is where stateful Python streaming is
-    headed. Requires the RocksDB state store provider and the protobuf
-    package (``tws_available()``); state remains per-key and partitioned
-    by user_id, so the horizontal-scale story is unchanged.
-    """
-    if not tws_available():
-        raise RuntimeError(
-            "transformWithStateInPandas needs the 'protobuf' package; "
-            "use running_user_totals_stream (applyInPandasWithState) instead"
-        )
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    out_schema = _TOTALS_OUT
-
-    class _Totals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("totals", _TOTALS_STATE)
-
-        def handleInputRows(self, key, rows, timerValues):
-            n, total = (
-                self._state.get() if self._state.exists() else (0, 0.0)
-            )
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].fillna(0.0).sum())
-            self._state.update((n, total))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "sum_value": [round(total, 2)],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        _Totals(),
-        outputStructType=out_schema,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
 def enrich_stream_with_static_dim(
     stream: DataFrame,
     dim: DataFrame,

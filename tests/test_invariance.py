@@ -75,8 +75,7 @@ def _run(spark, name) -> list[tuple]:
     return _canon_frame(plans.QUERIES[name](spark, SF_SMOKE).toPandas())
 
 
-@pytest.mark.parametrize("name", SCAN_CALLERS)
-def test_scan_caller_is_plan_invariant(name, spark, monkeypatch):
+def _assert_plan_invariant(spark, monkeypatch, name) -> None:
     want = _run(spark, name)
     differ = []
     for label, conf in PERTURBATIONS.items():
@@ -98,3 +97,23 @@ def test_scan_caller_is_plan_invariant(name, spark, monkeypatch):
         if got != want:
             differ.append(label)
     assert differ == [], f"{name} differs from its default run under {differ}"
+
+
+@pytest.mark.parametrize("name", SCAN_CALLERS)
+def test_scan_caller_is_plan_invariant(name, spark, monkeypatch):
+    _assert_plan_invariant(spark, monkeypatch, name)
+
+
+def test_pack_cumsum_path_is_plan_invariant(spark, monkeypatch):
+    """The test corpus is below ``_PACK_CUMSUM_MIN_DOCS``, so the case
+    above checks only the per-source window of
+    ``pack_sequences_contiguous``; with the threshold at 0 every run,
+    reference and perturbed, takes the ``distributed_cumsum`` path."""
+    from big_data_imdb_classifier_spark.plans import queries_text
+
+    monkeypatch.setattr(queries_text, "_PACK_CUMSUM_MIN_DOCS", 0)
+    qe = plans.QUERIES["pack_sequences_contiguous"](
+        spark, SF_SMOKE
+    )._jdf.queryExecution()
+    assert "_b#" in qe.optimizedPlan().toString()
+    _assert_plan_invariant(spark, monkeypatch, "pack_sequences_contiguous")

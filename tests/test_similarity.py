@@ -4,11 +4,13 @@ from __future__ import annotations
 
 import math
 
+import pytest
 from pyspark.sql import functions as F
 
 from big_data_imdb_classifier_spark.operators import similarity as SIM
 
-from .conftest import SF_ORACLE
+from .conftest import SF_ORACLE, SF_SMOKE
+from .oracle_harness import _canon_frame
 
 
 def _emb(spark):
@@ -218,57 +220,11 @@ def test_ivf_params_scaling():
         prev = cur
 
 
-def test_ann_auto_switch_fires_above_threshold(spark, monkeypatch):
-    """VERDICT r6 task 4: the brute-force gates swap to the IVF
-    shortlist IN CODE above the corpus threshold. Force the switch by
-    lowering the threshold, then prove (a) the plan shape changed — no
-    BroadcastNestedLoopJoin, Arrow cell-assignment present — and (b)
-    recall vs the exact result holds a floor; with the default
-    threshold the exact plan (and its oracle) is untouched."""
-    from big_data_imdb_classifier_spark.plans import (
-        queries_similarity as QS,
-    )
-    from .conftest import SF_SMOKE
-
-    # Default threshold: exact path — BNLJ present (the broadcast scan).
-    plan_exact = QS.knn_hard_negative_mining(
-        spark, SF_SMOKE
-    )._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastNestedLoopJoin" in plan_exact
-
-    exact = {
-        (r["query_id"], r["neighbor_id"])
-        for r in QS.knn_hard_negative_mining(spark, SF_SMOKE).collect()
-    }
-
-    monkeypatch.setattr(SIM, "ANN_SWITCH_MIN_CORPUS", 1)
-    df_ann = QS.knn_hard_negative_mining(spark, SF_SMOKE)
-    plan_ann = df_ann._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastNestedLoopJoin" not in plan_ann
-    # Arrow cell assignment (MapInPandas/ArrowEvalPython) is the IVF
-    # signature in the plan.
-    assert ("ArrowEvalPython" in plan_ann) or ("MapInPandas" in plan_ann)
-
-    ann = {(r["query_id"], r["neighbor_id"]) for r in df_ann.collect()}
-    assert exact, "exact result unexpectedly empty"
-    recall = len(ann & exact) / len(exact)
-    assert recall >= 0.5, f"ANN-path recall {recall:.2f} below floor"
-
-    # MaxSim and Matryoshka switch through the same helper: plans drop
-    # the nested-loop scan too.
-    for fn in (QS.sim_maxsim_multivector, QS.knn_matryoshka_dim_recall):
-        p = fn(spark, SF_SMOKE)._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastNestedLoopJoin" not in p, fn.__name__
-        assert fn(spark, SF_SMOKE).count() > 0, fn.__name__
-
-
 def test_corpus_row_count_file_dir_and_missing(spark, tmp_path):
-    """The switch predicate's metadata probe must handle every corpus
-    layout the engine itself produces (round-7 ADVICE: a Spark-written
-    directory of part files crashed it, so the ANN switch failed on
-    exactly the at-scale corpora it was built for): single file → footer
-    num_rows; directory → sum over part footers; missing/garbage → 0
-    (callers keep the exact plan, never crash)."""
+    """The footer row-count probe must handle every corpus layout the
+    engine itself produces: single file → footer num_rows; directory of
+    Spark part files → sum over part footers; missing/garbage → 0
+    (callers fall back, never crash)."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -298,9 +254,8 @@ def test_corpus_row_count_file_dir_and_missing(spark, tmp_path):
 def test_corpus_row_count_synthetic_uri():
     """synthetic:// corpora carry their row counts in the URI — the
     probe must parse them instead of falling through the filesystem
-    branch to 0 (round-8 ADVICE: that silently disabled the ANN/SemDeDup
-    switch for exactly the largest rehearsal corpora the scale path is
-    built for)."""
+    branch to 0, which would mis-size every index built on the largest
+    rehearsal corpora."""
     uri = (
         "synthetic://?rows=1000000&doc_rows=50000&doc_base=5000"
         "&emb_rows=2000000&emb_base=2000&seed=1&partitions=64"
@@ -308,75 +263,64 @@ def test_corpus_row_count_synthetic_uri():
     assert SIM.corpus_row_count(uri, "embeddings") == 2_000_000
     assert SIM.corpus_row_count(uri, "documents") == 50_000
     assert SIM.corpus_row_count(uri, "events") == 1_000_000
-    # a URI that doesn't size the table -> 0 (exact-plan fallback)
+    # a URI that doesn't size the table -> 0 (callers fall back)
     assert SIM.corpus_row_count("synthetic://?rows=10", "embeddings") == 0
-    # the switch itself fires off the parsed count
-    assert (
-        SIM.corpus_row_count(uri, "embeddings") >= SIM.ANN_SWITCH_MIN_CORPUS
+
+
+@pytest.fixture(scope="module")
+def tiled_corpus(tmp_path_factory):
+    """SF_SMOKE's embeddings tiled 8× with seeded 0.05 jitter (4,000
+    rows): enough rows that an IVF index sized for 10⁵ rows keeps fewer
+    cells than it trains, so a shortlist would really prune."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    src = pq.read_table(f"{SF_SMOKE}/embeddings.parquet")
+    emb = np.stack(src.column("embedding").to_pylist()).astype(np.float64)
+    rng = np.random.RandomState(0)
+    tiles = [emb] + [emb + rng.normal(0.0, 0.05, emb.shape) for _ in range(7)]
+    vecs = np.concatenate(tiles).astype(np.float32)
+    out = tmp_path_factory.mktemp("tiled")
+    pq.write_table(
+        pa.table(
+            {
+                "vec_id": pa.array(np.arange(len(vecs)), pa.int64()),
+                "embedding": pa.array(list(vecs), pa.list_(pa.float32())),
+                "label": pa.concat_arrays(
+                    [src.column("label").combine_chunks()] * len(tiles)
+                ),
+            }
+        ),
+        out / "embeddings.parquet",
     )
+    return str(out)
 
 
-def test_switched_oracles_registered_with_corpus_scope():
-    """The four plan-switching queries keep oracles that replay the
-    BELOW-switch exact plan; each must carry the ORACLE_VALID_BELOW
-    marker so sweep tools downgrade the hash compare to rows-only in
-    the switched regime instead of failing by design (round-8
-    ADVICE)."""
-    from big_data_imdb_classifier_spark.plans import load_all
-    from big_data_imdb_classifier_spark.plans.registry import (
-        ORACLE_VALID_BELOW,
-        ORACLES,
-    )
-
-    load_all()
-    for name in (
+@pytest.mark.parametrize(
+    "name",
+    [
         "dedup_embedding_cosine",
         "knn_hard_negative_mining",
         "sim_maxsim_multivector",
         "knn_matryoshka_dim_recall",
-    ):
-        assert ORACLE_VALID_BELOW.get(name) == (
-            "embeddings",
-            SIM.ANN_SWITCH_MIN_CORPUS,
-        ), name
-        assert name in ORACLES, name  # the oracle itself stays registered
+    ],
+)
+def test_exact_query_answer_ignores_corpus_size(
+    name, spark, monkeypatch, tiled_corpus
+):
+    """An exact similarity query has one plan: the corpus size read from
+    parquet footers must not change its answer. Reporting 10⁵ or 10⁹
+    rows for the 4,000-row corpus returns the same canonical frame as
+    the true count."""
+    from big_data_imdb_classifier_spark.plans import QUERIES, load_all
 
-
-def test_embedding_dedup_auto_switch_to_semdedup(spark, monkeypatch):
-    """VERDICT r7 task 8: the exact blocked-GEMM all-pairs dedup yields
-    to the cluster-local SemDeDup enumeration above the corpus
-    threshold. Force the switch and prove (a) the plan shape changed —
-    the block cross-join's non-equi self-join (BroadcastNestedLoopJoin)
-    is gone, the soft-cell assignment's Arrow eval is present — and
-    (b) the switched result is a subset of the exact pairs with high
-    coverage; with the default threshold the exact plan (and its hash
-    oracle) is untouched."""
-    from big_data_imdb_classifier_spark.plans import (
-        queries_similarity as QS,
-    )
-    from .conftest import SF_SMOKE
-
-    plan_exact = QS.dedup_embedding_cosine(
-        spark, SF_SMOKE
-    )._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastNestedLoopJoin" in plan_exact
-
-    exact = {
-        (r["vec_a"], r["vec_b"])
-        for r in QS.dedup_embedding_cosine(spark, SF_SMOKE).collect()
-    }
-    assert exact, "exact result unexpectedly empty"
-
-    monkeypatch.setattr(SIM, "ANN_SWITCH_MIN_CORPUS", 1)
-    df_ann = QS.dedup_embedding_cosine(spark, SF_SMOKE)
-    plan_ann = df_ann._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastNestedLoopJoin" not in plan_ann
-    assert ("ArrowEvalPython" in plan_ann) or ("MapInPandas" in plan_ann)
-
-    ann = {(r["vec_a"], r["vec_b"]) for r in df_ann.collect()}
-    assert ann <= exact, "SemDeDup path produced a non-exact pair"
-    coverage = len(ann & exact) / len(exact)
-    assert coverage >= 0.5, f"cell-local coverage {coverage:.2f} below floor"
+    load_all()
+    want = _canon_frame(QUERIES[name](spark, tiled_corpus).toPandas())
+    for rows in (10**5, 10**9):
+        monkeypatch.setattr(SIM, "corpus_row_count", lambda *a, n=rows, **k: n)
+        got = _canon_frame(QUERIES[name](spark, tiled_corpus).toPandas())
+        assert got == want, rows
 
 
 def test_semdedup_coverage_at_production_threshold(spark):

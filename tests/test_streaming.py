@@ -262,37 +262,6 @@ def test_watermark_drops_late_data_across_restarts(spark, tmp_path):
     assert out[base + dt.timedelta(hours=3)] == (1, 10), out
 
 
-def test_tws_running_totals_matches_batch_or_skips(spark):
-    """transformWithStateInPandas twin: identical semantics to the
-    applyInPandasWithState operator. Runs only where the protobuf
-    package exists (the new API's state-server protocol needs it);
-    elsewhere the capability probe must say so honestly."""
-    import pytest
-
-    if not ST.tws_available():
-        with pytest.raises(RuntimeError, match="protobuf"):
-            ST.running_user_totals_tws(ST.load_events_stream(spark, SF_SMOKE))
-        pytest.skip("protobuf not installed: transformWithState unavailable")
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    got = ST.run_to_memory(
-        spark,
-        ST.running_user_totals_tws(ST.load_events_stream(spark, SF_SMOKE)),
-        "t_tws_totals",
-        output_mode="update",
-    )
-    ev_batch = load_table(spark, SF_SMOKE, "events")
-    want = ev_batch.groupBy("user_id").agg(
-        F.count("*").alias("n_events"),
-        F.round(F.sum(F.coalesce("value", F.lit(0.0))), 2).alias("sum_value"),
-    )
-    assert {tuple(r) for r in got.collect()} == {
-        tuple(r) for r in want.collect()
-    }
-
-
 def test_stream_static_dim_join_matches_batch(spark):
     """Stream-static broadcast enrichment: one availableNow pass over the
     events stream joined to the customer dim must equal the batch join."""

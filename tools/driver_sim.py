@@ -41,29 +41,11 @@ def main() -> None:
         )
 
     import __spark_entry__ as e
-    from big_data_imdb_classifier_spark.operators.similarity import (
-        corpus_row_count,
-    )
-    from big_data_imdb_classifier_spark.plans.registry import (
-        ORACLE_VALID_BELOW,
-    )
     from tests.oracle_harness import compare
 
     queries = e.queries()
     oracles = e.oracle_sql()
     only = set(sys.argv[1:])
-
-    def oracle_in_scope(name: str) -> bool:
-        """Regime gate (round-8 ADVICE): plan-switching queries register
-        oracles that replay the BELOW-switch plan; sweeping them at a
-        corpus at/above the switch would fail by design, so the check
-        downgrades to rows-only there. Every driver SF is far below
-        every bound — this only fires on at-scale sweeps."""
-        scope = ORACLE_VALID_BELOW.get(name)
-        if scope is None:
-            return True
-        table, min_rows = scope
-        return corpus_row_count(SF_DIR, table) < min_rows
 
     results: dict[str, dict] = {}
     for name, fn in sorted(queries.items()):
@@ -72,12 +54,9 @@ def main() -> None:
         t0 = time.time()
         try:
             df = fn(spark, SF_DIR)
-            if name in oracles and oracle_in_scope(name):
+            if name in oracles:
                 compare(df, con, oracles[name])
                 status = "hash_match"
-            elif name in oracles:
-                n = df.count()
-                status = f"rows_only_oracle_out_of_scope({n})"
             else:
                 n = df.count()
                 status = f"rows_only({n})"
@@ -103,7 +82,7 @@ def main() -> None:
         t0 = time.time()
         try:
             df = queries[name](spark, SF_DIR)
-            if name in oracles and oracle_in_scope(name):
+            if name in oracles:
                 compare(df, con, oracles[name])
             else:
                 df.count()
