@@ -114,58 +114,6 @@ def _rerank_cosine(
     )
 
 
-def corpus_row_count(sf_dir: str, table: str = "embeddings") -> int:
-    """Corpus size from parquet FOOTERS (driver-side metadata read, no
-    Spark job): the IVF/SemDeDup index sizing (``ivf_params``), the
-    strided-sample stride and the text-packing plan choice read it at
-    query construction, where a ``count()`` would cost a cluster action.
-    The table may be a single file OR a Spark-written directory of part
-    files (any corpus the engine itself materialized, e.g. the scale
-    rehearsal's 10× embeddings) — ``sources.footer.footer_row_count``
-    sums ``num_rows`` across part footers in that case.
-
-    A ``synthetic://`` sf_dir (the storage-free scale-rehearsal
-    DataSources) carries its row counts IN THE URI — parse them instead
-    of probing the filesystem, where ``os.path.join`` on the URI can
-    never resolve.
-
-    A failed filesystem probe (missing path, non-parquet payload)
-    returns 0, and callers fall back to ``count()`` or their scale-safe
-    plan — but the swallowed exception is logged so a genuinely broken
-    probe (permissions, corrupt footer) is visible, not misread as
-    'small corpus'."""
-    import logging
-    import os
-
-    from ..sources.footer import footer_row_count
-
-    if sf_dir.startswith("synthetic://"):
-        from urllib.parse import parse_qsl, urlparse
-
-        opts = dict(parse_qsl(urlparse(sf_dir).query))
-        key = {
-            "embeddings": "emb_rows",
-            "documents": "doc_rows",
-            "events": "rows",
-        }.get(table, "rows")
-        try:
-            return int(opts.get(key, "0"))
-        except ValueError:
-            return 0
-
-    path = os.path.join(sf_dir, f"{table}.parquet")
-    try:
-        return footer_row_count(path)
-    except ValueError as exc:  # missing path / not parquet
-        logging.getLogger(__name__).warning(
-            "corpus_row_count: footer probe of %s failed (%r) — "
-            "returning 0",
-            path,
-            exc,
-        )
-        return 0
-
-
 def ivf_candidate_pairs(
     vectors: DataFrame,
     queries: DataFrame,
@@ -181,7 +129,7 @@ def ivf_candidate_pairs(
     per-query candidate pool is ~n_probe/n_clusters of the corpus
     instead of all of it. ``sample``: see knn_ivf — skips this build's
     sampling scan when the caller already collected the identical
-    default-limit strided sample."""
+    strided sample."""
     n_clusters, n_probe, _ = ivf_params(n_corpus)
     if sample is None:
         sample = strided_sample_vectors(
@@ -289,11 +237,20 @@ def knn_ann_hyperplane(
     return _rerank_cosine(cand, vectors, queries, k, id_col, vec_col)
 
 
+# Rows in the strided training sample of every IVF, IVF-PQ and SemDeDup
+# index (strided_sample_vectors). Lloyd trains at most one center per
+# sample row, so it also caps the cell count (ivf_params).
+SAMPLE_LIMIT = 10_000
+
+
 def ivf_params(n_vectors: int) -> tuple[int, int, int]:
     """Corpus-size-scaled IVF index parameters: ``n_clusters ≈ √N``
-    (the standard IVF sizing rule — cells stay ~√N vectors each) with a
-    constant 40% probe fraction, floored at the (16, 4) demo values so
-    tiny smoke corpora keep their historical behavior. Fixed (16, 4) at
+    (the standard IVF sizing rule — cells stay ~√N vectors each),
+    capped at ``SAMPLE_LIMIT`` because Lloyd trains at most one center
+    per sample row (past the cap, n_probe would reach every trained
+    cell and stop pruning), with a constant 40% probe fraction,
+    floored at the (16, 4) demo values so tiny smoke corpora keep
+    their historical behavior. Fixed (16, 4) at
     every scale is exactly the config a real deployment would NOT run:
     at 10× the corpus each cell holds 10× the vectors and recall decays
     (measured on the 10× rehearsal corpus: IVF recall@10 0.58 fixed vs
@@ -308,7 +265,7 @@ def ivf_params(n_vectors: int) -> tuple[int, int, int]:
     A fixed shortlist is the scaled index's failure mode — at 10× the
     pool, k·8 of ~8 000 ADC-scored candidates measured recall 0.40;
     √N-scaled (k·35) measured ≥0.62, floors met at every decade."""
-    n_clusters = max(16, int(n_vectors ** 0.5))
+    n_clusters = min(SAMPLE_LIMIT, max(16, int(n_vectors ** 0.5)))
     return (
         n_clusters,
         max(4, round(n_clusters * 0.4)),
@@ -340,16 +297,15 @@ def strided_sample_vectors(
     vectors: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    limit: int = 10_000,
     n_rows: int | None = None,
 ) -> np.ndarray:
-    """Bounded deterministic training sample: every ⌈N/limit⌉-th id,
+    """Bounded deterministic training sample: every ⌈N/SAMPLE_LIMIT⌉-th id,
     spanning the whole id range (a head-of-table sample is biased once
     ids correlate with content — see knn_ivf_pq). Returns float64
     (S, dim).
 
     ``n_rows``: the corpus row count when the CALLER already knows it
-    (parquet-footer metadata via corpus_row_count, or a threaded
+    (parquet-footer metadata via readers.table_row_count, or a threaded
     n_corpus) — skips the ``count()`` cluster job this function
     otherwise pays just to size the stride (round 9: every index build
     ran one redundant full-table count at query CONSTRUCTION; at 100 TB
@@ -357,11 +313,11 @@ def strided_sample_vectors(
     from file metadata). Must equal the true count — the stride, and
     therefore the sample and everything trained from it, depends on it."""
     n_vecs = n_rows if n_rows else vectors.count()
-    stride = max(1, -(-n_vecs // limit))
+    stride = max(1, -(-n_vecs // SAMPLE_LIMIT))
     rows = (
         vectors.where(F.pmod(F.col(id_col), F.lit(stride)) == 0)
         .orderBy(id_col)
-        .limit(limit)
+        .limit(SAMPLE_LIMIT)
         .select(vec_col)
         .collect()
     )
@@ -443,7 +399,6 @@ def knn_ivf(
     vec_col: str = "embedding",
     n_clusters: int = 16,
     n_probe: int = 4,
-    seed: int = 42,
     n_rows: int | None = None,
     sample: np.ndarray | None = None,
     cand: DataFrame | None = None,
@@ -460,11 +415,10 @@ def knn_ivf(
     n_probe/n_clusters of the corpus, and the cell assignment is
     re-usable (in production: computed once, stored as a column,
     partition-pruned at read time). Because the quantizer is replayable
-    in SQL, the WHOLE search hash-matches its DuckDB oracle — ``seed``
-    is kept for signature compatibility and ignored. ``n_rows``: see
+    in SQL, the WHOLE search hash-matches its DuckDB oracle. ``n_rows``: see
     strided_sample_vectors — skips the stride-sizing count job when the
     caller already knows the corpus size. ``sample``: the caller's
-    already-collected strided sample (default limit, same corpus) —
+    already-collected strided sample (same corpus) —
     skips this build's sampling scan when another index over the same
     corpus collected the identical sample (round 10: the recall gate
     builds IVF and IVF-PQ side by side; each sampling pass is a full
@@ -664,14 +618,12 @@ PQ_ITERS = 12
 
 
 def pq_train_codebooks(
-    sample: np.ndarray, m: int = 8, n_codes: int = 16, seed: int = 42,
-    n_iter: int = PQ_ITERS,
+    sample: np.ndarray, m: int = 8, n_codes: int = 16, n_iter: int = PQ_ITERS
 ) -> np.ndarray:
     """Train per-subspace codebooks over a bounded driver-side sample
     (standard practice: FAISS trains PQ on ~100k sampled vectors
     regardless of corpus size — training is O(sample), never O(corpus)).
-    RNG-FREE since round 5 (``seed`` accepted for signature
-    compatibility, ignored): each subspace runs the same deterministic
+    RNG-free: each subspace runs the same deterministic
     Lloyd recipe as the coarse quantizer (first-rows init, rounded-
     distance argmin, rounded per-round means), so the WHOLE IVF-PQ
     search replays in SQL. Returns (m, n_codes, dim//m) float64."""
@@ -717,8 +669,6 @@ def knn_ivf_pq(
     m: int = 8,
     n_codes: int = 16,
     refine: int = 8,
-    sample_limit: int = 10_000,
-    seed: int = 42,
     n_rows: int | None = None,
     sample: np.ndarray | None = None,
     cand: DataFrame | None = None,
@@ -732,8 +682,8 @@ def knn_ivf_pq(
     against the query block) — keeps a per-query shortlist of
     ``k*refine``; (2) exact cosine re-ranks ONLY the shortlist, so full
     float vectors are read for k*refine rows per query, never the
-    corpus. Codebooks train on a deterministic bounded sample
-    (``sample_limit``); corpus encoding is one Arrow pass and in
+    corpus. Codebooks train on the deterministic bounded sample
+    (``SAMPLE_LIMIT`` rows); corpus encoding is one Arrow pass and in
     production is written once as a column next to the cell id.
     """
     # --- coarse quantizer: deterministic Lloyd on the strided bounded
@@ -745,16 +695,14 @@ def knn_ivf_pq(
     # floods the shortlist with it (recall@10 0.38 head vs ≥0.5
     # strided). The same sample trains the PQ codebooks. ``sample``:
     # see knn_ivf — a caller that already collected the identical
-    # strided sample (same corpus, same limit) passes it in and this
+    # strided sample (same corpus) passes it in and this
     # build skips its own sampling scan. ``cand``: see knn_ivf — the
     # caller's shared cell-probe shortlist; the PQ codes join and
     # everything after are unchanged, only the quantizer/assign/probe
     # rebuild is skipped. ---
     if sample is None:
-        sample = strided_sample_vectors(
-            vectors, id_col, vec_col, sample_limit, n_rows=n_rows
-        )
-    books = pq_train_codebooks(sample, m=m, n_codes=n_codes, seed=seed)
+        sample = strided_sample_vectors(vectors, id_col, vec_col, n_rows=n_rows)
+    books = pq_train_codebooks(sample, m=m, n_codes=n_codes)
 
     codes = vectors.select(
         F.col(id_col).alias("neighbor_id"),

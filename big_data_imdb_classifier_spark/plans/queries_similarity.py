@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import similarity as SIM
-from ..sources.readers import load_table
+from ..sources.readers import load_table, table_row_count
 from .registry import ROUND_DIGITS, format_doc, query
 
 N_QUERY_VECS = 5  # vec_id < 5 are the demo query vectors
@@ -269,15 +269,13 @@ def knn_ann_recall_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Corpus size from parquet footers, not a count() job (round 9):
     # ivf_params and the training-sample stride depend only on this
     # number, and footer metadata equals count() exactly for the
-    # unfiltered table; the `or` keeps the count() fallback for corpora
-    # whose footers can't be probed. n_rows threads the same number into
-    # both index builds so their strided samplers skip THEIR stride
-    # count jobs too.
-    n_corpus = SIM.corpus_row_count(sf_dir) or emb.count()
+    # unfiltered table. n_rows threads the same number into both index
+    # builds so their strided samplers skip THEIR stride count jobs too.
+    n_corpus = table_row_count(sf_dir, "embeddings")
     n_clusters, n_probe, refine = SIM.ivf_params(n_corpus)
     # ONE strided-sample collect and ONE cell-probe shortlist for both
     # IVF-family searches (round 10): knn_ivf and knn_ivf_pq draw the
-    # IDENTICAL deterministic sample (same corpus, same default limit)
+    # IDENTICAL deterministic sample of the same corpus
     # and — because their quantizers train from that same sample with
     # the same params — enumerate the IDENTICAL (query, neighbor)
     # candidate set. Collecting the sample twice was a duplicated
@@ -374,26 +372,28 @@ def _lloyd_round_cte(r: int) -> str:
 
 
 def _ivf_coarse_prefix() -> str:
-    """Shared oracle prefix: index sizing IN SQL (same formulas/floors
-    as SIM.ivf_params), strided sample, the unrolled deterministic
+    """Shared oracle prefix: index sizing IN SQL (same formulas, floors
+    and cap as SIM.ivf_params), strided sample, the unrolled deterministic
     Lloyd quantizer, corpus cell assignment (vb), query multi-probe
     (qp), and the candidate set (cand). Both _ivf_oracle and
     _ivfpq_oracle build on this verbatim."""
     cd, dd = SIM.LLOYD_CENTER_DIGITS, SIM.LLOYD_DIST_DIGITS
+    lim = SIM.SAMPLE_LIMIT
     rounds = ",".join(
         _lloyd_round_cte(r) for r in range(1, SIM.LLOYD_ITERS + 1)
     )
     last = f"c{SIM.LLOYD_ITERS}"
     return f"""
     WITH cfg AS (
-      SELECT n,
-        GREATEST(16, CAST(floor(sqrt(n)) AS INT)) AS k_cells,
-        GREATEST(4, CAST(round(0.4 * GREATEST(16,
-          CAST(floor(sqrt(n)) AS INT))) AS INT)) AS n_probe,
-        GREATEST(8, GREATEST(16, CAST(floor(sqrt(n)) AS INT)) // 4)
-          AS refine,
-        CAST(ceil(n / 10000.0) AS BIGINT) AS stride
-      FROM (SELECT count(*)::BIGINT AS n FROM embeddings)
+      SELECT n, k_cells,
+        GREATEST(4, CAST(round(0.4 * k_cells) AS INT)) AS n_probe,
+        GREATEST(8, k_cells // 4) AS refine,
+        CAST(ceil(n / {lim}.0) AS BIGINT) AS stride
+      FROM (
+        SELECT n, LEAST({lim}, GREATEST(16, CAST(floor(sqrt(n)) AS INT)))
+          AS k_cells
+        FROM (SELECT count(*)::BIGINT AS n FROM embeddings)
+      )
     ),
     e AS MATERIALIZED (
       SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
@@ -401,7 +401,7 @@ def _ivf_coarse_prefix() -> str:
     samp AS MATERIALIZED (
       SELECT row_number() OVER (ORDER BY vec_id) - 1 AS rid, v
       FROM e, cfg WHERE vec_id % cfg.stride = 0
-      ORDER BY vec_id LIMIT 10000
+      ORDER BY vec_id LIMIT {lim}
     ),
     c0 AS MATERIALIZED (
       SELECT rid AS cid, list_transform(v, x -> round(x, {cd})) AS c
@@ -585,9 +585,8 @@ def knn_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.where(F.col("vec_id") < N_QUERY_VECS)
     # Index sizing + sample stride from parquet-footer metadata, not a
     # count() job (round 9) — identical number, zero cluster actions at
-    # construction; count() stays as the fallback for unprobeable
-    # corpora.
-    n = SIM.corpus_row_count(sf_dir) or emb.count()
+    # construction.
+    n = table_row_count(sf_dir, "embeddings")
     n_clusters, n_probe, _ = SIM.ivf_params(n)
     out = SIM.knn_ivf(
         emb, queries, k=TOP_K, n_clusters=n_clusters, n_probe=n_probe,
@@ -617,7 +616,7 @@ def knn_ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") < N_QUERY_VECS)
     # Footer metadata instead of a count() job — see knn_ann_ivf.
-    n = SIM.corpus_row_count(sf_dir) or emb.count()
+    n = table_row_count(sf_dir, "embeddings")
     n_clusters, n_probe, refine = SIM.ivf_params(n)
     out = SIM.knn_ivf_pq(
         emb,
@@ -692,7 +691,7 @@ def dedup_embedding_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefix as the IVF searches)."""
     emb = load_table(spark, sf_dir, "embeddings")
     # Footer metadata instead of a count() job — see knn_ann_ivf.
-    n = SIM.corpus_row_count(sf_dir) or emb.count()
+    n = table_row_count(sf_dir, "embeddings")
     k_cells, _, _ = SIM.ivf_params(n)
     pairs = SIM.semantic_dedup_cell_pairs(
         emb,

@@ -21,7 +21,7 @@ from pyspark.sql.window import Window
 
 from ..functions.nfkd import nfkd_fold_col
 from ..operators import text as TX
-from ..sources.readers import load_table
+from ..sources.readers import load_table, table_row_count
 from .registry import ROUND_DIGITS, query
 
 _SW = TX.LANG_MARKERS["en"]  # stopword list shared with the oracle SQL
@@ -85,9 +85,9 @@ def _scan_partitions_estimate(
                               (Σbytes + nFiles·openCost) / parallelism))
 
     then pack splits greedily: a partition closes when adding the next
-    split (+ its open cost) would exceed maxSplitBytes. synthetic://
-    corpora (scale rehearsal) read with their own partitions option,
-    always >= cores — return a large constant."""
+    split (+ its open cost) would exceed maxSplitBytes. A remote URI
+    (any ``scheme://`` but ``file://``) cannot be listed through ``os``
+    — return a large constant (assume wide, no reshuffle)."""
     if "://" in sf_dir and not sf_dir.startswith("file://"):
         return 1 << 20
     import glob as _glob
@@ -912,11 +912,8 @@ def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # N from parquet-footer metadata, not a count() job (round 9): the
     # smoothed-IDF numerator needs the exact unfiltered corpus count,
-    # which footers carry; count() remains the fallback for corpora
-    # whose footers can't be probed (corpus_row_count returns 0 there).
-    from ..operators.similarity import corpus_row_count
-
-    n_docs = corpus_row_count(sf_dir, "documents") or docs.count()
+    # which footers carry.
+    n_docs = table_row_count(sf_dir, "documents")
     idf = F.log((F.lit(n_docs + 1.0)) / (F.col("df") + 1.0)) + 1.0
     scored = tf.join(F.broadcast(df), "term").select(
         "doc_id", "term", (F.col("tf") * idf).alias("tfidf")
@@ -977,8 +974,8 @@ def jaccard_prefix_index(
     localCheckpoints the index, after which the corpus-scaled dfreq
     join strategy is invisible in the query's own plan (the checkpoint
     compiles the subplan to an RDD; downstream plans show only its
-    scan) — plan probes (scale rehearsal, tests) inspect the index
-    returned here instead."""
+    scan) — plan probes (tests) inspect the index returned here
+    instead."""
     docs = _docs(spark, sf_dir)
     sh = docs.select(
         "doc_id", TX.word_shingles_col("text", 3).alias("s")
@@ -995,23 +992,18 @@ def jaccard_prefix_index(
     w = Window.partitionBy("doc_id").orderBy(F.asc("_df"), F.asc("g"))
     prefix_len = F.col("sz") - F.ceil(F.lit(t) * F.col("sz")) + 1
     # CORPUS-SCALED join strategy for dfreq: it is VOCABULARY-sized
-    # (distinct shingles ≈ 52·docs — ~26M rows at the 100×-bench
-    # synthetic decade, where an unconditional broadcast was the
-    # round-6 rehearsal's one supralinear flag; unbounded at 100 TB).
-    # Catalyst won't pick broadcast itself (aggregate size estimates
-    # are pessimistic and the table clears the AQE auto-broadcast
-    # threshold well before the corpus is big), so choose explicitly:
-    # broadcast while the vocabulary comfortably fits an executor
-    # (≲10M entries — measured 2× faster locally than the shuffle
-    # join), shuffle-join on `g` beyond (reusing dfreq's own
-    # aggregation exchange). The doc count is a parquet-footer
-    # metadata read (round 9 — it was a count() JOB until this round,
-    # despite this comment's claim; corpus_row_count makes the claim
-    # true, with count() kept as the unprobeable-footer fallback); the
-    # same corpus-scaled-parameter philosophy as SIM.ivf_params.
-    from ..operators.similarity import corpus_row_count
-
-    n_docs = corpus_row_count(sf_dir, "documents") or docs.count()
+    # (distinct shingles ≈ 52·docs; unbounded at 100 TB, and an
+    # unconditional broadcast was the one supralinear flag of the
+    # 500k-doc rehearsal). Catalyst won't pick broadcast itself
+    # (aggregate size estimates are pessimistic and the table clears
+    # the AQE auto-broadcast threshold well before the corpus is big),
+    # so choose explicitly: broadcast while the vocabulary comfortably
+    # fits an executor (≲10M entries — measured 2× faster locally than
+    # the shuffle join), shuffle-join on `g` beyond (reusing dfreq's
+    # own aggregation exchange). The doc count is a parquet-footer
+    # metadata read, no job — the same corpus-scaled-parameter
+    # philosophy as SIM.ivf_params.
+    n_docs = table_row_count(sf_dir, "documents")
     vocab_fits = n_docs * 52 <= vocab_budget
     idx = (
         inv.join(F.broadcast(dfreq) if vocab_fits else dfreq, "g")
@@ -1241,42 +1233,18 @@ def pack_sequences_contiguous(spark: SparkSession, sf_dir: str) -> DataFrame:
     in. Deterministic (no RNG, no first-fit state), so it's both
     oracle-checkable and reproducible across cluster runs.
 
-    CORPUS-SCALED prefix-sum strategy (round 10): a window partitioned
-    by bare ``source`` caps parallelism at the SOURCE COUNT (20 here, a
-    handful in any real corpus) — at 100 TB that is 20 reducers each
-    sorting terabytes, the exact single-partition-window shape §2.5
-    warns about, and the one this engine's ``distributed_cumsum``
-    exists to remove: equal-width doc_id buckets per source, one hash
-    shuffle on (source, bucket), per-bucket running sums, constant-size
-    per-(source, bucket) offsets folded back via a broadcast join. That
-    shape costs extra small stages and jobs, which dominate while a
-    source's (doc_id, n_tokens) slice fits one reducer comfortably — so,
-    like the Jaccard index's dfreq join and SIM.ivf_params, the plan is
-    chosen from the corpus row count (parquet-footer metadata read, no
-    job): the window below
-    ``_PACK_CUMSUM_MIN_DOCS``, the cumsum above — and on an unprobeable
-    corpus the SCALE-SAFE cumsum (the small-corpus plan is the unsafe
-    one). Values are identical on both paths: n_tokens is
-    integral, the running sum is exact long arithmetic in both shapes,
-    and the bin_id expression on top is unchanged (re-proven against
-    the oracle at all three SFs)."""
-    from ..operators.similarity import corpus_row_count
-    from ..operators.stats import distributed_cumsum
-
+    One running-sum window per source, so its reducer parallelism is
+    bounded by the source count."""
     docs = _docs(spark, sf_dir)
     toks = docs.select(
         "doc_id", "source", TX.token_count_col("text").cast("long").alias("n_tokens")
     )
-    n_docs = corpus_row_count(sf_dir, "documents")
-    if n_docs and n_docs <= _PACK_CUMSUM_MIN_DOCS:
-        w = (
-            Window.partitionBy("source")
-            .orderBy("doc_id")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        cum = toks.withColumn("n_tokens_cum", F.sum("n_tokens").over(w))
-    else:
-        cum = distributed_cumsum(toks, ["source"], "doc_id", ["n_tokens"])
+    w = (
+        Window.partitionBy("source")
+        .orderBy("doc_id")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    cum = toks.withColumn("n_tokens_cum", F.sum("n_tokens").over(w))
     packed = cum.select(
         "source",
         "n_tokens",
@@ -1988,13 +1956,6 @@ def text_entropy_kl_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("source")
     )
 
-
-# pack_sequences_contiguous: docs above which the per-source window
-# gives way to distributed_cumsum (see the query docstring). 100k docs
-# of (doc_id, n_tokens) is ~2 MB per source-reducer at 20 sources —
-# far below any straggler/OOM concern — while every scale-rehearsal
-# decade (500k+ docs at 100×) exercises the scalable path.
-_PACK_CUMSUM_MIN_DOCS = 100_000
 
 _BPE_MERGES = 10
 

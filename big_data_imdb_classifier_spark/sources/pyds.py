@@ -1,22 +1,20 @@
-"""Custom Python DataSource (Spark 4 DataSource API): a deterministic
-synthetic-events generator.
+"""Custom Python DataSources (Spark 4 DataSource API): a deterministic
+synthetic-events generator (batch and stream reader) and a JSON-lines
+sink (batch and stream writer).
 
-The testdata parquet fixes the benchmark scale; for scale experiments
-beyond what is on disk (shuffle sizing, skew rehearsal, soak tests) the
-engine needs a storage-free source that fabricates the same ``events``
-shape at any row count. This implements Spark 4's Python DataSource API
-(``spark.dataSource.register`` → ``spark.read.format("synthetic_events")``):
-the driver plans N ``InputPartition``s and each executor materializes its
-row range independently — no driver-side generation, no storage, linear
-scale-out.
+``spark.dataSource.register`` → ``spark.read.format("synthetic_events")``
+fabricates the ``events`` shape at any row count: the driver plans N
+``InputPartition``s and each executor materializes its row range
+independently — no driver-side generation, no storage.
 
 Determinism is load-bearing (tests diff two reads byte-for-byte): every
 field derives from a splitmix64 hash of (seed, row_id), a pure function —
 no RNG object whose state would depend on partition scheduling.
 
 Reference parity note: the reference generates nothing (it reads fixed
-CSV/JSON inputs); this source exists for the 100 TB extension brief and
-mirrors the `events` table schema from TESTDATA.md.
+CSV/JSON inputs), and no registered query reads these sources; they
+exercise the Python DataSource API itself and mirror the ``events``
+table schema from TESTDATA.md.
 """
 
 from __future__ import annotations
@@ -340,209 +338,7 @@ class StreamPartFile(WriterCommitMessage):
         self.count = count
 
 
-class SyntheticDocumentsDataSource(DataSource):
-    """``spark.read.format("synthetic_documents")`` batch source — the
-    documents-table twin of the events generator, for scale rehearsal
-    decades beyond any on-disk parquet.
-
-    The corpus is structured EXACTLY like the on-disk 10× fabrication
-    of the scale rehearsal (commit 3c4ea60): conceptually ``replicas``
-    isolated copies of a ``base_rows`` base corpus. Every token of
-    replica r carries the prefix ``r{r}_``, so shingles, fingerprints,
-    MinHash bands and Jaccard prefixes NEVER collide across replicas —
-    doubling ``rows`` (at fixed ``base_rows``) doubles the near-dup
-    workload instead of squaring candidate sets, which is the growth a
-    real corpus has (more documents, not denser duplicates).
-
-    Within each replica the generator PLANTS near-duplicates: every
-    ``DOC_DUP_EVERY``-th base doc re-emits its predecessor's token
-    stream with 3 hash-positioned substitutions (shingle Jaccard ≈0.8 —
-    above every banding/prefix threshold in the registry), so pair
-    queries measure real candidate verification at every scale, not an
-    empty candidate set. Token indices are Zipf-ish (nested hash
-    modulus → ~1/k head-heavy), giving heavy-hitter and boilerplate
-    queries a realistic skew. All content is a pure splitmix64 function
-    of (seed, doc_id) — deterministic under any partitioning.
-
-    Options: ``rows`` (total docs), ``base_rows`` (per-replica corpus,
-    default 5000 = the sf0.1 shape), ``partitions``, ``seed``.
-    """
-
-    @classmethod
-    def name(cls) -> str:
-        return "synthetic_documents"
-
-    def schema(self) -> str:
-        return (
-            "doc_id bigint, text string, lang string, source string, "
-            "n_chars bigint"
-        )
-
-    def reader(self, schema) -> "SyntheticDocumentsReader":
-        return SyntheticDocumentsReader(self.options)
-
-
-DOC_LANGS: Sequence[str] = ("en", "de", "fr", "es", "zh")
-DOC_SOURCES = 20  # src0..src19, the sf0.1 shape
-DOC_VOCAB = 2000  # base token vocabulary per replica
-DOC_DUP_EVERY = 20  # plant a near-dup every N base docs
-_DOC_SUBS = 3  # token substitutions per planted near-dup
-
-
-def _doc_tokens(base_id: int, seed: int) -> list[str]:
-    """Token index stream of one BASE doc (no replica tag), 20-88
-    tokens, Zipf-ish indices."""
-    h = splitmix64(base_id ^ (seed * 0x9E3779B97F4A7C15 & _MASK))
-    n_tok = 20 + h % 69
-    toks = []
-    for j in range(n_tok):
-        hj = splitmix64(h ^ (j * 0xD1B54A32D192ED03 & _MASK))
-        # nested modulus → head-heavy (~1/k) index distribution
-        idx = hj % (1 + (hj >> 17) % DOC_VOCAB)
-        toks.append(idx)
-    return toks
-
-
-def _doc_row(doc_id: int, seed: int, base_rows: int) -> tuple:
-    rep, base_id = divmod(doc_id, base_rows)
-    h = splitmix64(base_id ^ (seed * 0x9E3779B97F4A7C15 & _MASK))
-    if base_id % DOC_DUP_EVERY == 0 and base_id > 0:
-        # planted near-dup: predecessor's stream, 3 substitutions
-        toks = _doc_tokens(base_id - 1, seed)
-        for s in range(_DOC_SUBS):
-            hs = splitmix64(h ^ (0xA5A5A5A5 + s))
-            toks[hs % len(toks)] = hs % DOC_VOCAB
-    else:
-        toks = _doc_tokens(base_id, seed)
-    tag = f"r{rep}_w"
-    text = " ".join(tag + str(t) for t in toks)
-    lang = DOC_LANGS[(h >> 8) % len(DOC_LANGS)]
-    source = f"src{base_id % DOC_SOURCES}_r{rep}"
-    return (doc_id, text, lang, source, len(text))
-
-
-class SyntheticDocumentsReader(DataSourceReader):
-    def __init__(self, options: dict) -> None:
-        self.rows = int(options.get("rows", 5000))
-        self.num_partitions = int(options.get("partitions", 32))
-        self.seed = int(options.get("seed", 0))
-        self.base_rows = int(options.get("base_rows", 5000))
-
-    def partitions(self) -> Sequence[InputPartition]:
-        return [InputPartition(i) for i in range(self.num_partitions)]
-
-    def read(self, partition: InputPartition) -> Iterator[tuple]:
-        i = partition.value
-        lo = self.rows * i // self.num_partitions
-        hi = self.rows * (i + 1) // self.num_partitions
-        for did in range(lo, hi):
-            yield _doc_row(did, self.seed, self.base_rows)
-
-
-class SyntheticEmbeddingsDataSource(DataSource):
-    """``spark.read.format("synthetic_embeddings")`` batch source — the
-    embeddings-table twin, for ANN scale rehearsal beyond the on-disk
-    corpus.
-
-    Replica isolation uses a PER-REPLICA ORTHANT OFFSET (the vector
-    analogue of the documents source's token tags): replica r's vectors
-    are ``noise + A·sign_r`` where ``sign_r`` is a deterministic ±1
-    pattern per replica and A sizes the offset to ~1.5× the noise norm.
-    Replica 0's offset is ZERO, so the demo query vectors (vec_id < 5)
-    keep plain geometry. Within a replica, neighbor ranking is driven
-    entirely by the noise component (the shared offset adds a constant
-    to every within-replica dot); across replicas, random sign patterns
-    decorrelate cosines to ~±1/√dim noise around 0 — so N vectors are
-    ``replicas`` isolated neighborhoods and the ANN workload grows
-    linearly in N, exactly like the sign-masked on-disk fabrication.
-
-    Options: ``rows``, ``base_rows`` (per-replica, default 2000 = the
-    sf0.1 shape), ``dim`` (default 64), ``partitions``, ``seed``.
-    """
-
-    @classmethod
-    def name(cls) -> str:
-        return "synthetic_embeddings"
-
-    def schema(self) -> str:
-        return "vec_id bigint, embedding array<float>, label int"
-
-    def reader(self, schema) -> "SyntheticEmbeddingsReader":
-        return SyntheticEmbeddingsReader(self.options)
-
-
-_EMB_NOISE = 0.14  # per-dim noise half-range ≈ the sf0.1 value spread
-_EMB_LABELS = 10
-
-
-class SyntheticEmbeddingsReader(DataSourceReader):
-    def __init__(self, options: dict) -> None:
-        self.rows = int(options.get("rows", 2000))
-        self.num_partitions = int(options.get("partitions", 32))
-        self.seed = int(options.get("seed", 0))
-        self.base_rows = int(options.get("base_rows", 2000))
-        self.dim = int(options.get("dim", 64))
-
-    def partitions(self) -> Sequence[InputPartition]:
-        return [InputPartition(i) for i in range(self.num_partitions)]
-
-    def read(self, partition: InputPartition) -> Iterator[tuple]:
-        # Vectorized generation: the whole partition's (n, dim) matrix
-        # comes from numpy-uint64 splitmix64 (bitwise, wraps like the
-        # scalar version) — this source is the linear measurement floor
-        # of the ANN third-decade rehearsal, so Python-per-float cost
-        # would dominate what it's trying to measure.
-        import numpy as np
-
-        i = partition.value
-        lo = self.rows * i // self.num_partitions
-        hi = self.rows * (i + 1) // self.num_partitions
-        n, dim = hi - lo, self.dim
-        if n <= 0:
-            return
-        # offset magnitude: ~1.5× the expected noise norm, spread per dim
-        a = 1.5 * _EMB_NOISE / 3**0.5
-
-        def mix(x: "np.ndarray") -> "np.ndarray":
-            x = x + np.uint64(0x9E3779B97F4A7C15)
-            x = (x ^ (x >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)
-            x = (x ^ (x >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)
-            return x ^ (x >> np.uint64(31))
-
-        with np.errstate(over="ignore"):
-            vids = np.arange(lo, hi, dtype=np.uint64)
-            seedmix = np.uint64(
-                (self.seed * 0x9E3779B97F4A7C15) & ((1 << 64) - 1)
-            )
-            h = mix(vids ^ seedmix)
-            js = np.arange(dim, dtype=np.uint64)
-            m = mix(h[:, None] ^ js[None, :])
-            vals = (m / np.float64(1 << 64)) * 2.0 - 1.0
-            reps = (vids // np.uint64(self.base_rows)).astype(np.int64)
-            # per-replica orthant sign pattern (replica 0 = zero offset)
-            uniq = np.unique(reps)
-            offs = np.zeros((len(uniq), dim))
-            rep_pos = {int(r): k for k, r in enumerate(uniq)}
-            for r in uniq:
-                if int(r) == 0:
-                    continue
-                sbits = mix(
-                    (np.uint64(self.seed << 20) ^ (np.uint64(int(r)) << np.uint64(10)))
-                    ^ js
-                )
-                offs[rep_pos[int(r)]] = a * np.where(sbits & np.uint64(1), 1.0, -1.0)
-            mat = (
-                vals * _EMB_NOISE
-                + offs[[rep_pos[int(r)] for r in reps]]
-            ).astype(np.float32)
-            labels = (h % np.uint64(_EMB_LABELS)).astype(np.int64)
-        for k in range(n):
-            yield (int(vids[k]), [float(x) for x in mat[k]], int(labels[k]))
-
-
 def register(spark) -> None:
     """Register the sources on a session (idempotent)."""
     spark.dataSource.register(SyntheticEventsDataSource)
-    spark.dataSource.register(SyntheticDocumentsDataSource)
-    spark.dataSource.register(SyntheticEmbeddingsDataSource)
     spark.dataSource.register(JsonLinesSinkDataSource)

@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .footer import footer_schema
+from .footer import footer_row_count, footer_schema
 from .schemas import TESTDATA_SCHEMAS
 
 
@@ -47,19 +47,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
     Each conversion is a codegen'd projection on top of the scan;
     pushdown/pruning on other columns is unaffected.
-
-    ``sf_dir`` may also be a ``synthetic://`` URI (e.g.
-    ``synthetic://?rows=10000000&seed=1&users=150000&partitions=64``), in
-    which case the ``events``, ``documents`` and ``embeddings`` tables
-    are served storage-free by the deterministic Python DataSources
-    (sources/pyds.py) — the scale-rehearsal route to SFs bigger than
-    any on-disk parquet. The events generator has no ``props`` column,
-    so it is padded with NULLs to keep the declared schema (a
-    props-consuming query run synthetically sees empty props — callers
-    pick props-free queries).
     """
-    if sf_dir.startswith("synthetic://"):
-        return _load_synthetic_events(spark, sf_dir, name)
     # These are *runtime* SQL confs; set them on whatever session we are
     # handed (the driver contract passes in a vanilla session that did not
     # go through our factory — round-1 CORRECTNESS failure mode).
@@ -96,65 +84,14 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def _load_synthetic_events(
-    spark: SparkSession, uri: str, name: str
-) -> DataFrame:
-    """Serve ``events``/``documents``/``embeddings`` from the synthetic
-    Python DataSources (sources/pyds.py). URI query params map onto the
-    reader options — events keeps the round-4 names (rows/users/
-    partitions/seed), documents and embeddings take ``doc_``/``emb_``
-    prefixed row counts so ONE synthetic sf_dir can size all three
-    tables independently::
-
-        synthetic://?rows=1000000&users=15000&doc_rows=50000
-                    &doc_base=5000&emb_rows=20000&emb_base=2000
-
-    Session timezone is pinned UTC like the parquet path so event-time
-    bucketing agrees across sources."""
-    from urllib.parse import parse_qsl, urlparse
-
-    from . import pyds
-
-    pyds.register(spark)
-    try:
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-    except Exception:
-        pass
-    opts = dict(parse_qsl(urlparse(uri).query))
-    shared = {k: v for k, v in opts.items() if k in ("seed", "partitions")}
-    if name == "events":
-        reader = spark.read.format("synthetic_events")
-        for k in ("rows", "users"):
-            if k in opts:
-                reader = reader.option(k, opts[k])
-        for k, v in shared.items():
-            reader = reader.option(k, v)
-        # The generator has no props column; pad to the declared schema.
-        return reader.load().withColumn("props", F.lit(None).cast("string"))
-    if name == "documents":
-        reader = spark.read.format("synthetic_documents")
-        if "doc_rows" in opts:
-            reader = reader.option("rows", opts["doc_rows"])
-        if "doc_base" in opts:
-            reader = reader.option("base_rows", opts["doc_base"])
-        for k, v in shared.items():
-            reader = reader.option(k, v)
-        return reader.load()
-    if name == "embeddings":
-        reader = spark.read.format("synthetic_embeddings")
-        if "emb_rows" in opts:
-            reader = reader.option("rows", opts["emb_rows"])
-        if "emb_base" in opts:
-            reader = reader.option("base_rows", opts["emb_base"])
-        if "dim" in opts:
-            reader = reader.option("dim", opts["dim"])
-        for k, v in shared.items():
-            reader = reader.option(k, v)
-        return reader.load()
-    raise ValueError(
-        "synthetic:// serves only events/documents/embeddings, "
-        f"not {name!r}"
-    )
+def table_row_count(sf_dir: str, name: str) -> int:
+    """Rows of the table ``load_table`` reads for ``name``, from its
+    parquet footers on the driver — no Spark job. Query construction
+    reads it where a ``count()`` would cost a cluster action (index
+    sizing, sample strides, IDF numerators). A missing path or a
+    non-parquet payload raises ``ValueError`` naming the path, as the
+    schema read in ``load_table`` does."""
+    return footer_row_count(os.path.join(sf_dir, f"{name}.parquet"))
 
 
 def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:

@@ -47,7 +47,6 @@ def test_scan_callers_are_pinned():
     assert SCAN_CALLERS == [
         "approx_percentile_price",
         "histogram_equidepth_price",
-        "pack_sequences_contiguous",
         "stats_gini_customer_revenue",
         "stats_ks_two_sample",
         "stats_mad_outliers",
@@ -75,7 +74,8 @@ def _run(spark, name) -> list[tuple]:
     return _canon_frame(plans.QUERIES[name](spark, SF_SMOKE).toPandas())
 
 
-def _assert_plan_invariant(spark, monkeypatch, name) -> None:
+@pytest.mark.parametrize("name", SCAN_CALLERS)
+def test_scan_caller_is_plan_invariant(name, spark, monkeypatch):
     want = _run(spark, name)
     differ = []
     for label, conf in PERTURBATIONS.items():
@@ -97,23 +97,3 @@ def _assert_plan_invariant(spark, monkeypatch, name) -> None:
         if got != want:
             differ.append(label)
     assert differ == [], f"{name} differs from its default run under {differ}"
-
-
-@pytest.mark.parametrize("name", SCAN_CALLERS)
-def test_scan_caller_is_plan_invariant(name, spark, monkeypatch):
-    _assert_plan_invariant(spark, monkeypatch, name)
-
-
-def test_pack_cumsum_path_is_plan_invariant(spark, monkeypatch):
-    """The test corpus is below ``_PACK_CUMSUM_MIN_DOCS``, so the case
-    above checks only the per-source window of
-    ``pack_sequences_contiguous``; with the threshold at 0 every run,
-    reference and perturbed, takes the ``distributed_cumsum`` path."""
-    from big_data_imdb_classifier_spark.plans import queries_text
-
-    monkeypatch.setattr(queries_text, "_PACK_CUMSUM_MIN_DOCS", 0)
-    qe = plans.QUERIES["pack_sequences_contiguous"](
-        spark, SF_SMOKE
-    )._jdf.queryExecution()
-    assert "_b#" in qe.optimizedPlan().toString()
-    _assert_plan_invariant(spark, monkeypatch, "pack_sequences_contiguous")

@@ -178,24 +178,19 @@ def test_ivf_pq_recall_and_exact_rerank(spark):
 
 
 def test_pq_codebooks_deterministic_and_shaped():
-    """Codebook training is seeded and shape-stable; encoding maps every
-    vector to m in-range codes."""
+    """Codebook training is deterministic and shape-stable."""
     import numpy as np
 
     from big_data_imdb_classifier_spark.operators import similarity as SIM
 
     rng = np.random.default_rng(7)
     sample = rng.normal(size=(200, 64))
-    b1 = SIM.pq_train_codebooks(sample, m=8, n_codes=16, seed=42)
-    b2 = SIM.pq_train_codebooks(sample, m=8, n_codes=16, seed=42)
+    b1 = SIM.pq_train_codebooks(sample, m=8, n_codes=16)
+    b2 = SIM.pq_train_codebooks(sample, m=8, n_codes=16)
     assert b1.shape == (8, 16, 8)
     assert np.array_equal(b1, b2)
-    # RNG-free since round 5: the seed is signature-compat only, so a
-    # different seed yields the SAME books (training is pure Lloyd on
-    # the sample), and every coordinate sits on the rounding grid the
-    # SQL oracle replays.
-    b3 = SIM.pq_train_codebooks(sample, m=8, n_codes=16, seed=43)
-    assert np.array_equal(b1, b3)
+    # RNG-free: every coordinate sits on the rounding grid the SQL
+    # oracle replays.
     assert np.array_equal(
         b1, np.round(b1, SIM.LLOYD_CENTER_DIGITS)
     )
@@ -204,35 +199,40 @@ def test_pq_codebooks_deterministic_and_shaped():
 def test_ivf_params_scaling():
     """Index sizing: √N cells (floored at the 16/4/8 demo values), 40%
     probe fraction, √N-proportional re-rank budget — all monotone in N
-    and exactly the demo floor at tiny corpora."""
-    from big_data_imdb_classifier_spark.operators.similarity import (
-        ivf_params,
-    )
-
+    and exactly the demo floor at tiny corpora. Lloyd trains at most
+    one center per sample row, so at any N the probe count stays at
+    40% of the cells the sample can train."""
+    ivf_params = SIM.ivf_params
     assert ivf_params(50) == (16, 6, 8)
     assert ivf_params(256) == (16, 6, 8)
     nc, np_, rf = ivf_params(20_000)
     assert nc == 141 and np_ == round(141 * 0.4) and rf == 141 // 4
     prev = (0, 0, 0)
-    for n in [10, 100, 1_000, 10_000, 100_000, 1_000_000]:
+    for n in [10, 100, 1_000, 10_000, 100_000, 1_000_000, 10**8, 10**9, 10**10]:
         cur = ivf_params(n)
         assert all(c >= p for c, p in zip(cur, prev)), (n, cur, prev)
+        trainable = min(cur[0], SIM.SAMPLE_LIMIT)
+        assert cur[1] <= round(0.4 * trainable), (n, cur)
         prev = cur
 
 
 def test_corpus_row_count_file_dir_and_missing(spark, tmp_path):
-    """The footer row-count probe must handle every corpus layout the
+    """The footer row-count probe handles every corpus layout the
     engine itself produces: single file → footer num_rows; directory of
-    Spark part files → sum over part footers; missing/garbage → 0
-    (callers fall back, never crash)."""
+    Spark part files → sum over part footers. A missing or non-parquet
+    table raises ValueError naming its path."""
+    import re
+
     import pyarrow as pa
     import pyarrow.parquet as pq
+
+    from big_data_imdb_classifier_spark.sources.readers import table_row_count
 
     tbl = pa.table({"vec_id": list(range(7))})
     single = tmp_path / "emb_single"
     single.mkdir()
     pq.write_table(tbl, single / "embeddings.parquet")
-    assert SIM.corpus_row_count(str(single)) == 7
+    assert table_row_count(str(single), "embeddings") == 7
 
     # Spark-written layout: a DIRECTORY named embeddings.parquet.
     multi = tmp_path / "emb_multi"
@@ -242,29 +242,16 @@ def test_corpus_row_count_file_dir_and_missing(spark, tmp_path):
         .repartition(4)
         .write.parquet(str(multi / "embeddings.parquet"))
     )
-    assert SIM.corpus_row_count(str(multi)) == 123
+    assert table_row_count(str(multi), "embeddings") == 123
 
-    assert SIM.corpus_row_count(str(tmp_path / "nope")) == 0
+    missing = tmp_path / "nope"
+    with pytest.raises(ValueError, match=re.escape(str(missing))):
+        table_row_count(str(missing), "embeddings")
     garbage = tmp_path / "emb_bad"
     garbage.mkdir()
     (garbage / "embeddings.parquet").write_bytes(b"not parquet")
-    assert SIM.corpus_row_count(str(garbage)) == 0
-
-
-def test_corpus_row_count_synthetic_uri():
-    """synthetic:// corpora carry their row counts in the URI — the
-    probe must parse them instead of falling through the filesystem
-    branch to 0, which would mis-size every index built on the largest
-    rehearsal corpora."""
-    uri = (
-        "synthetic://?rows=1000000&doc_rows=50000&doc_base=5000"
-        "&emb_rows=2000000&emb_base=2000&seed=1&partitions=64"
-    )
-    assert SIM.corpus_row_count(uri, "embeddings") == 2_000_000
-    assert SIM.corpus_row_count(uri, "documents") == 50_000
-    assert SIM.corpus_row_count(uri, "events") == 1_000_000
-    # a URI that doesn't size the table -> 0 (callers fall back)
-    assert SIM.corpus_row_count("synthetic://?rows=10", "embeddings") == 0
+    with pytest.raises(ValueError, match=re.escape(str(garbage))):
+        table_row_count(str(garbage), "embeddings")
 
 
 @pytest.fixture(scope="module")
@@ -311,14 +298,17 @@ def test_exact_query_answer_ignores_corpus_size(
 ):
     """An exact similarity query has one plan: the corpus size read from
     parquet footers must not change its answer. Reporting 10⁵ or 10⁹
-    rows for the 4,000-row corpus returns the same canonical frame as
-    the true count."""
+    rows for the 4,000-row corpus (patched where the similarity plans
+    look it up) returns the same canonical frame as the true count."""
     from big_data_imdb_classifier_spark.plans import QUERIES, load_all
+    from big_data_imdb_classifier_spark.plans import queries_similarity
 
     load_all()
     want = _canon_frame(QUERIES[name](spark, tiled_corpus).toPandas())
     for rows in (10**5, 10**9):
-        monkeypatch.setattr(SIM, "corpus_row_count", lambda *a, n=rows, **k: n)
+        monkeypatch.setattr(
+            queries_similarity, "table_row_count", lambda *a, n=rows: n
+        )
         got = _canon_frame(QUERIES[name](spark, tiled_corpus).toPandas())
         assert got == want, rows
 

@@ -446,119 +446,6 @@ class TestSyntheticEventsDataSource:
             r = r.option(k, v)
         return r.load()
 
-    def test_load_table_synthetic_scheme(self, spark):
-        """load_table serves events from a synthetic:// URI: same rows
-        as a direct format read, props padded to the declared schema,
-        and any other table name rejected."""
-        import pytest
-        from pyspark.sql import functions as F
-
-        from big_data_imdb_classifier_spark.sources.readers import (
-            load_table,
-        )
-
-        uri = "synthetic://?rows=2000&seed=3&users=40&partitions=4"
-        via_load = load_table(spark, uri, "events")
-        assert [f.name for f in via_load.schema.fields] == [
-            "event_id", "ts", "user_id", "event_type", "value", "props",
-        ]
-        assert via_load.count() == 2000
-        assert (
-            via_load.where(F.col("props").isNotNull()).count() == 0
-        )  # NULL-padded
-        direct = self._load(spark, rows=2000, seed=3, users=40, partitions=4)
-        assert (
-            via_load.drop("props").exceptAll(direct).count() == 0
-            and direct.exceptAll(via_load.drop("props")).count() == 0
-        )
-        with pytest.raises(
-            ValueError, match="only events/documents/embeddings"
-        ):
-            load_table(spark, uri, "orders")
-
-    def test_synthetic_documents_replica_isolation(self, spark):
-        """The documents generator must mirror the on-disk fabrication's
-        guarantees: replica-tagged tokens (zero cross-replica shingle
-        collisions), replica-suffixed sources, planted near-dups within
-        a replica, deterministic reads, and n_chars == len(text)."""
-        from pyspark.sql import functions as F
-
-        from big_data_imdb_classifier_spark.sources.readers import load_table
-
-        uri = (
-            "synthetic://?doc_rows=2000&doc_base=1000&seed=5&partitions=8"
-        )
-        docs = load_table(spark, uri, "documents")
-        assert docs.count() == 2000
-        assert [f.name for f in docs.schema.fields] == [
-            "doc_id", "text", "lang", "source", "n_chars",
-        ]
-        # determinism
-        h1 = docs.agg(F.sum(F.crc32("text"))).first()[0]
-        h2 = load_table(spark, uri, "documents").agg(
-            F.sum(F.crc32("text"))
-        ).first()[0]
-        assert h1 == h2
-        # n_chars consistency
-        assert (
-            docs.where(F.length("text") != F.col("n_chars")).count() == 0
-        )
-        # replica isolation: every token of replica r starts with r{r}_
-        bad = docs.select(
-            (F.col("doc_id") / 1000).cast("int").alias("rep"),
-            F.explode(F.split(F.trim("text"), r"\s+")).alias("tok"),
-        ).where(
-            ~F.col("tok").startswith(
-                F.concat(F.lit("r"), F.col("rep").cast("string"), F.lit("_"))
-            )
-        )
-        assert bad.count() == 0
-        # sources suffixed per replica
-        assert docs.select("source").distinct().count() == 40
-        # planted near-dups: doc k*20 shares most shingles with k*20-1
-        pair = docs.where(F.col("doc_id").isin(19, 20)).select(
-            "doc_id", F.split(F.trim("text"), r"\s+").alias("t")
-        ).collect()
-        t = {r["doc_id"]: r["t"] for r in pair}
-        inter = len(set(t[19]) & set(t[20]))
-        union = len(set(t[19]) | set(t[20]))
-        assert inter / union > 0.5, (inter, union)
-
-    def test_synthetic_embeddings_orthant_replicas(self, spark):
-        """The embeddings generator: declared schema, deterministic,
-        replica 0 offset-free (demo queries keep plain geometry), and
-        cross-replica cosines decorrelated below within-replica planted
-        structure."""
-        import numpy as np
-        from pyspark.sql import functions as F
-
-        from big_data_imdb_classifier_spark.sources.readers import load_table
-
-        uri = (
-            "synthetic://?emb_rows=600&emb_base=200&seed=5&partitions=4"
-        )
-        emb = load_table(spark, uri, "embeddings")
-        assert emb.count() == 600
-        assert dict(emb.dtypes) == {
-            "vec_id": "bigint", "embedding": "array<float>", "label": "int",
-        }
-        rows = emb.orderBy("vec_id").collect()
-        again = load_table(spark, uri, "embeddings").orderBy(
-            "vec_id"
-        ).collect()
-        assert rows == again
-        m = np.array([r["embedding"] for r in rows])
-        # replica 0 has zero offset: mean vector near origin
-        assert np.abs(m[:200].mean(axis=0)).max() < 0.05
-        # replicas 1/2 sit in distinct orthants: their mean offsets are
-        # large and nearly orthogonal-to-opposite under random signs
-        mu1, mu2 = m[200:400].mean(axis=0), m[400:600].mean(axis=0)
-        assert np.linalg.norm(mu1) > 0.5 and np.linalg.norm(mu2) > 0.5
-        cos12 = mu1 @ mu2 / (np.linalg.norm(mu1) * np.linalg.norm(mu2))
-        assert abs(cos12) < 0.5
-        # labels span the 10-value domain
-        assert emb.select("label").distinct().count() == 10
-
     def test_row_count_schema_and_partitioning(self, spark):
         from pyspark.sql import functions as F
 

@@ -606,8 +606,8 @@ def test_jaccard_prefix_vocab_switch_changes_join_plan(spark):
     # At smoke scale Catalyst auto-broadcasts the tiny dfreq on its own
     # size estimate, masking the switch; disable auto-broadcast so the
     # only difference between the two plans is the explicit hint — the
-    # regime the switch exists for (a real vocabulary blows past the
-    # threshold, as the 5M-doc rehearsal census shows).
+    # regime the switch exists for (a vocabulary past the auto-broadcast
+    # threshold).
     confs = {
         "spark.sql.autoBroadcastJoinThreshold": "-1",
         "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
@@ -711,28 +711,3 @@ def test_text_features_inline_bit_equal_to_per_column(spark):
     g = {r.doc_id: tuple(r)[1:] for r in got.collect()}
     w = {r.doc_id: tuple(r)[1:] for r in want.collect()}
     assert g == w  # exact equality, not approx — the trees must match
-
-
-def test_pack_sequences_cumsum_path_equals_window_path(spark, monkeypatch):
-    """pack_sequences_contiguous picks its prefix-sum plan from the
-    corpus row count (round 10): per-source window below
-    _PACK_CUMSUM_MIN_DOCS, distributed_cumsum above (the window caps
-    parallelism at the source count — the §2.5 single-partition shape
-    at 100 TB). Both paths must produce IDENTICAL rows: n_tokens is
-    integral and the running sum is exact long arithmetic in both
-    shapes. Forcing the threshold to 0 exercises the cumsum path on the
-    same corpus the window path answered for."""
-    from big_data_imdb_classifier_spark.plans import queries_text as QT
-    from .conftest import SF_ORACLE
-
-    win = QT.pack_sequences_contiguous(spark, SF_ORACLE).collect()
-    monkeypatch.setattr(QT, "_PACK_CUMSUM_MIN_DOCS", 0)
-    cum = QT.pack_sequences_contiguous(spark, SF_ORACLE).collect()
-    assert [tuple(r) for r in win] == [tuple(r) for r in cum]
-    # and the forced plan really is the cumsum shape — a window over
-    # (source, bucket) — with no range partitioning on doc_id (the final
-    # orderBy still range-partitions its small output)
-    qe = QT.pack_sequences_contiguous(spark, SF_ORACLE)._jdf.queryExecution()
-    assert "_b#" in qe.optimizedPlan().toString()
-    physical = qe.executedPlan().toString()
-    assert not re.search(r"rangepartitioning\([^)]*doc_id", physical), physical
